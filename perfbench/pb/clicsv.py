@@ -144,33 +144,30 @@ class _Gen:
             joins.append("table2.E %s table3.E" % eq())
         return tables, joins
 
-    # one method per query shape; `shapes` cycles through all of them
-    def project(self):
-        t = self.rng.choice(list(TABLES))
+    # One method per query shape. Each takes the stratum's argument: the
+    # table it reads, or the number of tables it joins.
+    def project(self, t):
         q = self.rng.random() < 0.3
         cols = self.projection([t], q, self.rng.randint(1, len(TABLES[t])))
         return "SELECT %s FROM %s WHERE %s" % (
             ", ".join(cols), t, self.where([t], q, bounded_on=t))
 
-    def star(self):
-        t = self.rng.choice(list(TABLES))
+    def star(self, t):
         return "SELECT * FROM %s WHERE %s" % (t, self.where([t], False, bounded_on=t))
 
-    def distinct(self):
-        t = self.rng.choice(list(LOW_CARD))
+    def distinct(self, t):
         cols = self.rng.sample(LOW_CARD[t], self.rng.randint(1, 2))
         where = " WHERE " + self.where([t], False) if self.rng.random() < 0.7 else ""
         return "SELECT DISTINCT %s FROM %s%s" % (", ".join(cols), t, where)
 
-    def aggregate(self):
-        t = self.rng.choice(list(TABLES))
+    def aggregate(self, t):
         aggs = [self.agg(t, self.rng.choice(TABLES[t]), False)
                 for _ in range(self.rng.randint(1, 4))]
         where = " WHERE " + self.where([t], False) if self.rng.random() < 0.7 else ""
         return "SELECT %s FROM %s%s" % (", ".join(aggs), t, where)
 
-    def join_rows(self):
-        tables, joins = self.join(self.rng.choice([2, 3]))
+    def join_rows(self, n):
+        tables, joins = self.join(n)
         if self.rng.random() < 0.2:
             cols = ["*"]
         else:
@@ -179,8 +176,8 @@ class _Gen:
             ", ".join(cols), ", ".join(tables),
             self.where(tables, True, bounded_on="table1", joins=joins))
 
-    def join_aggregate(self):
-        tables, joins = self.join(self.rng.choice([2, 3]))
+    def join_aggregate(self, n):
+        tables, joins = self.join(n)
         aggs = []
         for _ in range(self.rng.randint(1, 3)):
             t = self.rng.choice(tables)
@@ -189,8 +186,7 @@ class _Gen:
             ", ".join(aggs), ", ".join(tables),
             self.where(tables, True, joins=joins))
 
-    def group_by(self):
-        t = self.rng.choice(list(LOW_CARD))
+    def group_by(self, t):
         g = LOW_CARD[t][0]
         others = [c for c in TABLES[t] if c != g]
         aggs = [self.agg(t, self.rng.choice(others), False)
@@ -200,8 +196,7 @@ class _Gen:
         return "SELECT %s, %s FROM %s%s GROUP BY %s%s" % (
             g, ", ".join(aggs), t, where, g, order)
 
-    def order_limit(self):
-        t = self.rng.choice(list(TABLES))
+    def order_limit(self, t):
         cols = self.projection([t], False, self.rng.randint(1, 3))
         if KEY[t] not in cols:
             cols.append(KEY[t])  # a unique column makes the order total
@@ -210,19 +205,31 @@ class _Gen:
         return "SELECT %s FROM %s%s ORDER BY %s LIMIT %d" % (
             ", ".join(cols), t, where, ", ".join(keys), self.rng.randint(1, 50))
 
-    shapes = [project, star, distinct, aggregate, join_rows, join_aggregate,
-              group_by, order_limit]
+
+# A stratum is a shape with the table it reads or the number of tables it
+# joins: what sets a query's cost, since every query scans whole tables.
+# Every round holds each stratum equally often, so rounds, and runs on
+# different seeds, cost about the same.
+STRATA = ([(_Gen.project, t) for t in TABLES] + [(_Gen.star, t) for t in TABLES]
+          + [(_Gen.distinct, t) for t in LOW_CARD] + [(_Gen.aggregate, t) for t in TABLES]
+          + [(_Gen.join_rows, n) for n in (2, 3)] + [(_Gen.join_aggregate, n) for n in (2, 3)]
+          + [(_Gen.group_by, t) for t in LOW_CARD] + [(_Gen.order_limit, t) for t in TABLES])
 
 
-def queries(seed, count):
-    """`count` distinct query texts, the shapes taken in turn."""
-    gen = _Gen(random.Random(seed * 7919 + 1))
-    out, seen = [], set()
-    i = 0
-    while len(out) < count:
-        text = _Gen.shapes[i % len(_Gen.shapes)](gen)
-        i += 1
-        if text not in seen:
+def rounds(seed, sizes):
+    """One round of query texts per entry of `sizes`, round i holding
+    sizes[i] texts of every stratum in an order shuffled by the seed. No
+    text repeats."""
+    rng = random.Random(seed * 7919 + 1)
+    gen, seen, out = _Gen(rng), set(), []
+    for per_stratum in sizes:
+        texts = []
+        for shape, arg in STRATA * per_stratum:
+            text = shape(gen, arg)
+            while text in seen:
+                text = shape(gen, arg)
             seen.add(text)
-            out.append(text)
+            texts.append(text)
+        rng.shuffle(texts)
+        out.append(texts)
     return out

@@ -1,6 +1,6 @@
 """Per-layer metrics of a traced run, derived from its spans and Spark
-counters. Totals are per timed pass, so runs with different pass counts
-compare directly."""
+counters. Totals are per timed round, so runs with different round
+counts compare directly."""
 
 from collections import defaultdict
 
@@ -56,7 +56,7 @@ _COUNTERS = ["jobs", "stages", "tasks", "task_run_s", "task_cpu_s", "gc_s",
              "spill_bytes", "input_bytes", "input_records"]
 
 
-def derive(spans, counters, execs, passes, timed_s):
+def derive(spans, counters, execs, rounds, timed_s):
     """spans: dicts from spans.jsonl; counters: dicts from counters.jsonl
     (one per query execution); execs: the timed executions."""
     m = dict.fromkeys(METRICS, 0.0)
@@ -69,22 +69,22 @@ def derive(spans, counters, execs, passes, timed_s):
         if s["name"] in _SETUP_SPANS:
             m[_SETUP_SPANS[s["name"]]] += secs
         elif s["name"] in _SPAN_SUMS:
-            m[_SPAN_SUMS[s["name"]]] += secs / passes
+            m[_SPAN_SUMS[s["name"]]] += secs / rounds
         if s["name"] == "queries.construct":
             m["queries.construct_jobs"] += sum(
                 1 for j in jobs_of[s["query"]]
-                if s["start_ns"] <= j["start_ns"] <= s["end_ns"]) / passes
+                if s["start_ns"] <= j["start_ns"] <= s["end_ns"]) / rounds
         elif s["name"] == "query":
-            m["query.self_s"] += stats.self_time(s, jobs_of[s["query"]]) / 1e9 / passes
+            m["query.self_s"] += stats.self_time(s, jobs_of[s["query"]]) / 1e9 / rounds
     tasks_ok = 0
     for c in counters:
         for k in _COUNTERS:
-            m["spark." + k] += c[k] / passes
+            m["spark." + k] += c[k] / rounds
         tasks_ok += c["tasks_ok"]
-    launched = m["spark.tasks"] * passes
+    launched = m["spark.tasks"] * rounds
     m["spark.tasks_ok_ratio"] = tasks_ok / launched if launched else 1.0
     run = m["spark.task_run_s"]
     m["spark.cpu_per_run"] = m["spark.task_cpu_s"] / run if run else 0.0
-    m["engine.rows_rendered"] = sum(e.get("rows", 0) for e in execs) / passes
+    m["engine.rows_rendered"] = sum(e.get("rows", 0) for e in execs) / rounds
     m["trace.throughput_qps"] = len(execs) / timed_s
     return m

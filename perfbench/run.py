@@ -22,6 +22,7 @@ import os
 import shutil
 import signal
 import sys
+import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -32,8 +33,11 @@ from pb.jvm import Jvm  # noqa: E402
 
 CORES = len(os.sched_getaffinity(0))  # what nproc reports
 SETUPS = 2          # cold set-ups per untraced run; setup_s is their median
-CLI_QUERIES = 100   # timed cli_csv query texts per pass
-CLI_WARMUP = 24     # further texts run untimed first
+CLI_WARMUP_ROUNDS = 2  # cli_csv: untimed rounds, each one text per stratum
+CLI_ROUNDS = 12        # cli_csv: timed rounds made; a run times at most this many
+# timed rounds a run makes however long they take: cli_csv's 5 rounds of 20
+# give the p90 at least 10 samples beyond it
+MIN_ROUNDS = {"cli_csv": 6, "relational_sf0.1": 3, "pipeline_sf0.1": 5}
 JVM_TIMEOUT = 150   # seconds, per JVM launch of a run
 BUILD_TIMEOUT = 800
 
@@ -49,7 +53,7 @@ RELATIONAL = [
 ]
 PIPELINE = [
     "x32_dedup_clusters", "x35_corpus_pipeline", "x45_semantic_dedup",
-    "x57_cluster_canonical", "x82_ingest_indexed", "x86_text_retrieval",
+    "x57_cluster_canonical", "x86_text_retrieval",
 ]
 WORKLOADS = {
     "cli_csv": None,
@@ -76,17 +80,21 @@ def write_lines(path, lines):
 
 
 def prepare_cli(run_dir, seed):
+    """Every round, warm-up or timed, has one text of each stratum."""
     data = os.path.join(run_dir, "data")
     clicsv.write_tables(data, seed)
-    texts = clicsv.queries(seed, CLI_QUERIES + CLI_WARMUP)
-    timed, warm = texts[:CLI_QUERIES], texts[CLI_QUERIES:]
+    rounds = clicsv.rounds(seed, [1] * (CLI_WARMUP_ROUNDS + CLI_ROUNDS))
+    warm = [t for r in rounds[:CLI_WARMUP_ROUNDS] for t in r]
+    rounds = rounds[CLI_WARMUP_ROUNDS:]
+    timed = [t for r in rounds for t in r]
     write_lines(os.path.join(run_dir, "queries.txt"), timed)
     write_lines(os.path.join(run_dir, "warmup.txt"), warm)
-    names = ["c%03d" % i for i in range(len(timed))]
+    names = ["c%03d" % i for i in range(len(timed))] + ["w%03d" % i for i in range(len(warm))]
     opts = ["--workload", "cli_csv", "--data", data,
             "--queries", os.path.join(run_dir, "queries.txt"),
+            "--round-size", str(len(rounds[0])),
             "--warmup", os.path.join(run_dir, "warmup.txt")]
-    checker = lambda out: check.check_cli(data, timed, names, out, run_dir, clicsv.TABLES)
+    checker = lambda out: check.check_cli(data, timed + warm, names, out, run_dir, clicsv.TABLES)
     return opts, checker
 
 
@@ -135,8 +143,17 @@ def main():
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(run_dir)
     jvm = Jvm(ROOT, build_dir, os.path.join(run_dir, "jvm.log"))
+    phases, t = {}, time.monotonic()
+
+    def phase(name):
+        nonlocal t
+        now = time.monotonic()
+        phases[name] = round(now - t, 2)
+        t = now
+
     try:
         jvm.ensure_built(BUILD_TIMEOUT)
+        phase("build")
         inv = jvm.inventory()
         if WORKLOADS[args.workload] is None:
             opts, checker = prepare_cli(run_dir, args.seed)
@@ -148,29 +165,33 @@ def main():
                 fail("dataset %s not found; pass --data-root" % (sf_dir or sf))
             opts, checker = prepare_inventory(run_dir, args.seed, sf_dir, subset, inv["queries"],
                                               os.path.join(build_dir, "oracle"))
-        opts += ["--cores", str(CORES)]
+        opts += ["--cores", str(CORES), "--min-rounds", str(MIN_ROUNDS[args.workload])]
+        phase("inputs")
         out = os.path.join(run_dir, "out")
         jvm.timed_call(["run"] + opts + ["--out", out, "--seconds", str(args.seconds),
                                          "--trace", str(args.trace)], JVM_TIMEOUT)
         with open(os.path.join(out, "summary.json")) as f:
             summary = json.load(f)
+        phase("run")
         setups = [summary["setup_s"]]
         if not args.trace:
             for _ in range(SETUPS - 1):
                 line = jvm.timed_call(["setup"] + opts, JVM_TIMEOUT).strip().splitlines()[-1]
                 setups.append(float(line.split("=", 1)[1]))
+        phase("setups")
 
-        # Output check, after timing: errors from the untimed pass and
+        # Output check, after timing: errors from the untimed passes and
         # mismatches against the oracle, then failures in the timed region.
         check_errors = {c["name"]: c["error"] for c in read_jsonl(os.path.join(out, "check.jsonl"))
                         if c["error"] is not None}
         check_errors.update(checker(os.path.join(out, "check")))
+        phase("check")
         execs = read_jsonl(os.path.join(out, "timed.jsonl"))
-        first = {e["name"]: e["digest"] for e in execs if e["pass"] == 1}
-        for e in execs:
+        first = {}
+        for e in execs:  # a name timed again must render the same text
             if e["digest"]:
-                e["expected_digest"] = first[e["name"]]
-        timed_names = set(first)
+                e["expected_digest"] = first.setdefault(e["name"], e["digest"])
+        timed_names = {e["name"] for e in execs}
         warm_failed = sum(1 for n in check_errors if n not in timed_names)
         attempted, failed = stats.count_failures(execs, check_errors)
         attempted += warm_failed
@@ -179,15 +200,18 @@ def main():
             print("FAIL %s: %s" % (name, str(why).splitlines()[0][:300]), file=sys.stderr)
 
         e2e, p90 = end_to_end(setups, summary, execs, attempted, failed)
-        print("%s seed=%d cores=%d passes=%d executions=%d p90_beyond=%d setups=%s pass_s=%s" % (
-            args.workload, args.seed, CORES, summary["passes"], len(execs), p90["beyond"],
-            ["%.3f" % s for s in setups], ["%.3f" % s for s in summary["pass_seconds"]]))
+        print("%s seed=%d cores=%d rounds=%d executions=%d p90_beyond=%d setups=%s round_s=%s" % (
+            args.workload, args.seed, CORES, len(summary["round_seconds"]), len(execs),
+            p90["beyond"], ["%.3f" % s for s in setups],
+            ["%.3f" % s for s in summary["round_seconds"]]))
+        print("  phases_s %s" % json.dumps(phases))
         for k, (v, unit) in e2e.items():
             print("  %-16s %12.6g %s" % (k, v, unit))
         if args.trace:
             spans = read_jsonl(os.path.join(out, "spans.jsonl"))
             counters = read_jsonl(os.path.join(out, "counters.jsonl"))
-            derived = layers.derive(spans, counters, execs, summary["passes"], summary["timed_s"])
+            derived = layers.derive(spans, counters, execs, len(summary["round_seconds"]),
+                                    summary["timed_s"])
             metrics = {k: {"value": v, "unit": layers.METRICS[k]} for k, v in derived.items()}
             trace_dir = os.path.join(build_dir, "trace")
             os.makedirs(trace_dir, exist_ok=True)

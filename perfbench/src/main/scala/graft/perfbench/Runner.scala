@@ -20,13 +20,15 @@ import graft.engine.{Catalog, CsvCatalogSource, Engine, ResultFormatter}
   *   list  <out.json>  the inventory's query names, their oracle SQL and
   *                     the smoke entry's input directory
   *   setup <options>   set up session and tables, print `setup_s=<s>`
-  *   run   <options>   set up, warm up, timed region, check pass; results
+  *   run   <options>   set up, warm up, check pass, timed rounds; results
   *                     to --out
   *
   * Options: --workload cli_csv|inventory, --data <dir>, --queries <file>
-  * (one query text or name per line, in run order), --warmup <file>
-  * (cli_csv: query texts run before timing), --out <dir>,
-  * --seconds <n>, --trace 0|1, --cores <n>, --launch-ns <epoch ns>.
+  * (one query text or name per line, in run order; cli_csv: consecutive
+  * rounds of --round-size texts, inventory: one round, repeated),
+  * --warmup <file> (cli_csv: query texts run before timing), --out <dir>,
+  * --seconds <n>, --min-rounds <n>, --trace 0|1, --cores <n>,
+  * --launch-ns <epoch ns>.
   */
 object Runner {
 
@@ -71,7 +73,8 @@ object Runner {
       Files.readAllLines(Paths.get(f), UTF_8).asScala.filter(_.nonEmpty)
     }
     opts("workload") match {
-      case "cli_csv" => new CliCsv(opts("data"), lines("queries"), lines("warmup"))
+      case "cli_csv" =>
+        new CliCsv(opts("data"), lines("queries"), opts("round-size").toInt, lines("warmup"))
       case "inventory" => new Inventory(opts("data"), lines("queries"))
       case w => throw new IllegalArgumentException(s"unknown workload $w")
     }
@@ -93,9 +96,17 @@ object Runner {
     spark.stop()
   }
 
-  /** One timed execution; `result` is the rendered text, or null. */
-  private final case class Exec(name: String, pass: Int, seconds: Double,
+  /** One execution; `result` is the rendered text, or null. */
+  private final case class Exec(name: String, round: Int, seconds: Double,
       error: String, result: String)
+
+  private def attempt(name: String, round: Int)(body: => String): Exec = {
+    val q0 = System.nanoTime()
+    val (result, error) =
+      try (body, null)
+      catch { case NonFatal(e) => (null, String.valueOf(e.getMessage)) }
+    Exec(name, round, (System.nanoTime() - q0) / 1e9, error, result)
+  }
 
   private def run(opts: Map[String, String]): Unit = {
     val w = workload(opts)
@@ -105,35 +116,44 @@ object Runner {
     val sc = spark.sparkContext
 
     // Warm-up, untimed (JIT and codegen), one query at a time like the
-    // timed region: run concurrently, it left the first timed pass 25%
-    // slower than the second instead of 7%. Its errors count as failures.
-    val cores = opts("cores").toInt
+    // timed region: run concurrently, it left the first timed round 25%
+    // slower than the second instead of 7%. Its errors count as failures
+    // and its outputs are checked.
     val w0 = System.nanoTime()
-    val warmed = runAll(w.warmup, 1)(n => w.execute(spark, n, Tracer.off, -1))
+    val warmed = w.warmup.map(n => attempt(n, 0)(w.execute(spark, n, Tracer.off, -1)))
     val warmupS = (System.nanoTime() - w0) / 1e9
 
-    // Timed region: whole passes in the given order, one query at a time,
-    // until --seconds have passed.
+    // Check pass, untimed: outputs that run.py compares with the oracle.
+    // It runs before the timed region so that it adds to the warm-up:
+    // after the warm-up alone, the first of three timed rounds of
+    // pipeline_sf0.1 ran 3-23% slower than the last.
+    val checkDir = s"$out/check"
+    Files.createDirectories(Paths.get(checkDir))
+    val checked = runAll(w.checked, opts("cores").toInt)(n => w.check(spark, n, checkDir))
+
+    System.gc() // what warm-up and check pass left is not collected in the timed region
+
+    // Timed region: whole rounds, one query at a time, until --seconds
+    // have passed and at least --min-rounds are done.
     val listener = if (tr.on) Some(new JobListener(tr)) else None
     listener.foreach(sc.addSparkListener)
     val execs = ArrayBuffer.empty[Exec]
-    val passSeconds = ArrayBuffer.empty[Double]
+    val roundSeconds = ArrayBuffer.empty[Double]
     val budgetNs = (opts("seconds").toDouble * 1e9).toLong
+    val minRounds = opts("min-rounds").toInt
     val t0 = System.nanoTime()
-    var pass = 0
-    while (pass == 0 || System.nanoTime() - t0 < budgetNs) {
-      pass += 1
-      val p0 = System.nanoTime()
-      w.names.foreach { n =>
+    var names = w.round(0)
+    while (names.nonEmpty &&
+        (roundSeconds.size < minRounds || System.nanoTime() - t0 < budgetNs)) {
+      val round = roundSeconds.size + 1
+      val r0 = System.nanoTime()
+      names.get.foreach { n =>
         val id = execs.size
         if (tr.on) sc.setJobGroup(s"pb-$id", n, interruptOnCancel = false)
-        val q0 = System.nanoTime()
-        val (result, error) =
-          try (tr.span("query", id, n)(w.execute(spark, n, tr, id)), null)
-          catch { case NonFatal(e) => (null, String.valueOf(e.getMessage)) }
-        execs += Exec(n, pass, (System.nanoTime() - q0) / 1e9, error, result)
+        execs += attempt(n, round)(tr.span("query", id, n)(w.execute(spark, n, tr, id)))
       }
-      passSeconds += (System.nanoTime() - p0) / 1e9
+      roundSeconds += (System.nanoTime() - r0) / 1e9
+      names = w.round(round)
     }
     val timedS = (System.nanoTime() - t0) / 1e9
     if (tr.on) {
@@ -141,23 +161,19 @@ object Runner {
       org.apache.spark.perfbench.ListenerShim.drain(sc)
     }
 
-    // Check pass, untimed: outputs that run.py compares with the oracle.
-    val checkDir = s"$out/check"
-    Files.createDirectories(Paths.get(checkDir))
-    val checked = runAll(w.checked, cores)(n => w.check(spark, n, checkDir))
     spark.stop()
 
     def write(file: String, lines: Iterable[String]): Unit =
       Files.write(Paths.get(s"$out/$file"), lines.asJava, UTF_8)
-    write("check.jsonl", (warmed ++ checked).map { case (n, e) =>
+    write("check.jsonl", (warmed.map(e => e.name -> e.error) ++ checked).map { case (n, e) =>
       s"""{"name":${Json.str(n)},"error":${Json.str(e)}}""" })
-    execs.filter(e => e.pass == 1 && e.result != null).foreach { e =>
+    (warmed ++ execs).filter(_.result != null).foreach { e =>
       Files.writeString(Paths.get(s"$checkDir/${e.name}.txt"), e.result)
     }
     write("timed.jsonl", execs.map { e =>
       val (digest, rows) =
         if (e.result == null) ("", 0) else (Json.sha1(e.result), CliCsv.rows(e.result))
-      s"""{"name":${Json.str(e.name)},"pass":${e.pass},"seconds":${e.seconds},""" +
+      s"""{"name":${Json.str(e.name)},"round":${e.round},"seconds":${e.seconds},""" +
         s""""error":${Json.str(e.error)},"digest":${Json.str(digest)},"rows":$rows}""" })
     if (tr.on) {
       write("spans.jsonl", tr.lines)
@@ -165,7 +181,7 @@ object Runner {
     }
     write("summary.json", Seq(
       s"""{"setup_s":$setupS,"warmup_s":$warmupS,"timed_s":$timedS,""" +
-        s""""passes":$pass,"pass_seconds":${passSeconds.mkString("[", ",", "]")},""" +
+        s""""round_seconds":${roundSeconds.mkString("[", ",", "]")},""" +
         s""""peak_rss_mb":${peakRssMb()}}"""))
   }
 
@@ -195,7 +211,8 @@ object Runner {
   * see them.
   */
 private[perfbench] trait Workload {
-  def names: IndexedSeq[String]
+  /** The names of timed round `i` (from 0), or None when there is none. */
+  def round(i: Int): Option[IndexedSeq[String]]
   def setup(spark: SparkSession, tr: Tracer): Unit
   /** Run through `execute`, untimed, before the timed region. */
   def warmup: IndexedSeq[String]
@@ -213,11 +230,15 @@ private[perfbench] trait Workload {
   * catalog of CSV tables, rendered in the reference's output format.
   */
 private[perfbench] final class CliCsv(dir: String, texts: IndexedSeq[String],
-    warmupTexts: IndexedSeq[String]) extends Workload {
-  val names: IndexedSeq[String] = texts.indices.map(i => f"c$i%03d")
+    roundSize: Int, warmupTexts: IndexedSeq[String]) extends Workload {
+  private val names: IndexedSeq[String] = texts.indices.map(i => f"c$i%03d")
   /** Further texts, never timed: each timed text is a shape not seen before. */
   val warmup: IndexedSeq[String] = warmupTexts.indices.map(i => f"w$i%03d")
   private val byName = names.zip(texts).toMap ++ warmup.zip(warmupTexts)
+
+  /** Each round its own texts: no text runs twice. */
+  def round(i: Int): Option[IndexedSeq[String]] =
+    Some(names.slice(i * roundSize, (i + 1) * roundSize)).filter(_.size == roundSize)
 
   def setup(spark: SparkSession, tr: Tracer): Unit = {
     val catalog = tr.span("engine.catalog_load", -1)(Catalog.load(s"$dir/metadata.txt"))
@@ -245,8 +266,9 @@ private[perfbench] object CliCsv {
   * each built and then fully materialized the way graft.Bench times it.
   */
 private[perfbench] final class Inventory(dir: String,
-    val names: IndexedSeq[String]) extends Workload {
+    names: IndexedSeq[String]) extends Workload {
   def warmup: IndexedSeq[String] = names
+  def round(i: Int): Option[IndexedSeq[String]] = Some(names)
 
   def setup(spark: SparkSession, tr: Tracer): Unit =
     tr.span("tables.register", -1)(Tables.registerAll(spark, dir))

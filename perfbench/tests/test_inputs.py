@@ -15,14 +15,32 @@ from pb import check, clicsv  # noqa: E402
 
 
 class Generator(unittest.TestCase):
+    def texts(self, seed, sizes=(1, 2, 2)):
+        return [t for r in clicsv.rounds(seed, list(sizes)) for t in r]
+
     def test_seeded_and_distinct(self):
-        a = clicsv.queries(5, 120)
-        self.assertEqual(a, clicsv.queries(5, 120))
-        self.assertNotEqual(a, clicsv.queries(6, 120))
-        self.assertEqual(len(set(a)), 120)
+        a = self.texts(5)
+        self.assertEqual(a, self.texts(5))
+        self.assertNotEqual(a, self.texts(6))
+        self.assertEqual(len(a), 5 * len(clicsv.STRATA))
+        self.assertEqual(len(set(a)), len(a))
+
+    def test_every_round_holds_every_stratum_equally(self):
+        def stratum(text):
+            head, rest = text.split(" FROM ", 1)
+            tables = rest.split(" WHERE ")[0].split(" GROUP BY ")[0].split(" ORDER BY ")[0]
+            kind = ("distinct" if "DISTINCT" in head else "group" if "GROUP BY" in rest
+                    else "order" if "LIMIT" in rest else "agg" if "(" in head
+                    else "star" if head == "SELECT *" and "," not in tables else "rows")
+            return kind, tables.replace(" ", "")
+        rounds = clicsv.rounds(3, [1, 2, 2])
+        first = sorted(map(stratum, rounds[1]))
+        self.assertEqual(sorted(list(map(stratum, rounds[0])) * 2), first)
+        self.assertEqual(sorted(map(stratum, rounds[2])), first)
+        self.assertEqual(sorted(map(stratum, clicsv.rounds(4, [2])[0])), first)
 
     def test_covers_the_reference_grammar(self):
-        text = "\n".join(clicsv.queries(5, 100))
+        text = "\n".join(self.texts(5))
         for feature in ["SELECT *", "DISTINCT", "GROUP BY", "ORDER BY", "LIMIT",
                         " AND ", " OR ", "FROM table1, table2, table3",
                         "FROM table1, table2 WHERE", "(("]:
@@ -35,7 +53,7 @@ class Generator(unittest.TestCase):
         self.assertRegex(text, r" -\d")
 
     def test_row_queries_are_bounded(self):
-        for q in clicsv.queries(9, 200):
+        for q in self.texts(9, [4, 4, 4]):
             if q.startswith("SELECT DISTINCT") or "(" in q.split(" FROM ")[0] \
                     or " LIMIT " in q:
                 continue
@@ -88,6 +106,23 @@ class CliOracle(unittest.TestCase):
             text = "SELECT B FROM t WHERE B <= 123 AND (E = 36250 AND B > E)"
             bad = check.check_cli(d, [text], ["o"], d, d, {"t": ["B", "E", "F"]})
             self.assertEqual(bad, {})
+
+
+class CliJoinOracle(unittest.TestCase):
+    def test_inequality_across_joined_tables(self):
+        tables = {"table1": ["A", "B"], "table2": ["B", "E"], "table3": ["E", "H"]}
+        rows = {"table1": "0,0\n1,1\n2,1\n", "table2": "0,0\n1,1\n", "table3": "0,5\n1,0\n"}
+        text = ("SELECT table1.A FROM table1, table2, table3 WHERE table1.B = table2.B "
+                "AND table2.E == table3.E AND (table3.H <= table1.B)")
+        with tempfile.TemporaryDirectory() as d:
+            for t, body in rows.items():
+                with open(os.path.join(d, t + ".csv"), "w") as f:
+                    f.write(body)
+            for name, out in (("ok", "table1.A\n1\n2"), ("bad", "table1.A\n0")):
+                with open(os.path.join(d, name + ".txt"), "w") as f:
+                    f.write(out)
+            bad = check.check_cli(d, [text, text], ["ok", "bad"], d, d, tables)
+            self.assertEqual(list(bad), ["bad"])
 
 
 class Frames(unittest.TestCase):

@@ -111,7 +111,7 @@ class Layers(unittest.TestCase):
                      "sched_delay_s": 0.1, "shuffle_write_bytes": 10,
                      "shuffle_read_bytes": 10, "spill_bytes": 0, "input_bytes": 5,
                      "input_records": 1}]
-        m = layers.derive(spans, counters, [{"rows": 0}], passes=1, timed_s=2.0)
+        m = layers.derive(spans, counters, [{"rows": 0}], rounds=1, timed_s=2.0)
         self.assertEqual(set(m), set(layers.METRICS))
         self.assertAlmostEqual(m["query.self_s"], 400e-9)
         self.assertEqual(m["queries.construct_jobs"], 1)
