@@ -64,7 +64,11 @@ object Engine {
 
   /** Bootstrap a data directory (metadata.txt + CSVs) and return a
     * runner — the whole reference lifecycle (sqlengine.py:384-410) as a
-    * closure over the session.
+    * closure over the session. Each table is read on first use and held
+    * for the session in Spark's columnar cache, spilling to local disk
+    * rather than running out of memory; a file rewritten afterwards is
+    * seen only once the directory is bootstrapped again, as the reference
+    * sees only what it loaded at startup (CsvCatalogSource.registerAll).
     */
   def forDirectory(spark: SparkSession, dir: String): String => DataFrame = {
     val catalog = Catalog.load(s"$dir/metadata.txt")

@@ -134,6 +134,7 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("deviation 5: ambiguous unqualified column raises, not fan-out") {
+    withRef() // before intercept, which would swallow the cancel
     // reference [verified]: `select B from table1, table2` -> BOTH B columns
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       run("select B from table1, table2").collect()
@@ -148,6 +149,7 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("deviation 7: unknown column is an error, not silent emptiness") {
+    withRef() // before intercept, which would swallow the cancel
     intercept[org.apache.spark.sql.AnalysisException] {
       run("select NOPE from table1").collect()
     }
