@@ -2,19 +2,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** The timed action for every benchmark surface here (Bench, TimeQ,
-    * BenchBudgetSpec): materialize EVERY output row, discarding them
-    * executor-side — what a consumer writing the result would pay,
-    * minus the sink. NOT `count()`: under count the optimizer is free
-    * to elide exactly the work being benchmarked — pruned projections
+  /** The timed action for every benchmark surface here (Bench,
+    * BenchBudgetSpec, perfbench): materialize EVERY output row,
+    * discarding them executor-side — what a consumer writing the result
+    * would pay, minus the sink. NOT `count()`: under count the optimizer
+    * is free to elide exactly the work being benchmarked — pruned projections
     * turn a per-doc text pipeline into a bare scan-count, aggregate
     * pruning drops unreferenced aggregate expressions (measured: s29's
     * HLL sketch vanished, 0.56s vs 4.4s real), and a row-preserving
     * final left join against aggregated-unique keys disappears
     * entirely (x46/x47: flat 0.3s from 5k to 500k docs). The
-    * count-vs-materialize audit (tools/CountHonesty, SCALE.md
-    * round-14) found 18 of 109 queries over 2x hollow, ~17s of elided
-    * work at sf0.1.
+    * count-vs-materialize audit recorded in SCALE.md round-14 found 18
+    * of 109 queries over 2x hollow, ~17s of elided work at sf0.1.
     */
   def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.toRdd.foreach(_ => ())

@@ -18,25 +18,21 @@ object ResultFormatter {
     * Streams rows through toLocalIterator instead of collect(), so the
     * driver holds one PARTITION at a time, not the whole result — the
     * difference between "slow" and "OOM" if the shell is pointed at a
-    * big table. `maxRows` caps output for interactive use; the default
-    * keeps reference semantics.
+    * big table.
     */
-  def render(df: DataFrame, maxRows: Long = Long.MaxValue): String = {
+  def render(df: DataFrame): String = {
     val header = df.columns.mkString(", ")
-    val sb = new StringBuilder(header)
-    var n = 0L
     val it = df.toLocalIterator()
-    while (it.hasNext && n < maxRows) {
-      sb += '\n'
-      sb ++= it.next().toSeq.map {
-        case null => "NULL"
-        case v => v.toString
-      }.mkString(", ")
-      n += 1
-    }
-    if (n == 0) s"$header\nNo Results Found"
+    if (!it.hasNext) s"$header\nNo Results Found"
     else {
-      if (it.hasNext) sb ++= s"\n... (output capped at $maxRows rows)"
+      val sb = new StringBuilder(header)
+      while (it.hasNext) {
+        sb += '\n'
+        sb ++= it.next().toSeq.map {
+          case null => "NULL"
+          case v => v.toString
+        }.mkString(", ")
+      }
       sb.toString
     }
   }

@@ -312,8 +312,8 @@ object Pq {
     * (ivfAssign's nearest_centroid + the m subspace natives) that
     * production runs once at ingest, persisted bucketed by cell so
     * every later search's probe join prunes physically. ivfPqTopK
-    * builds it inline for the self-contained form; Scale10's search
-    * decade checkpoints it first, because re-deriving the O(nlist·dim)
+    * builds it inline for the self-contained form; a repeated search
+    * should checkpoint it first, because re-deriving the O(nlist·dim)
     * assignment per query batch measurably dominated search wall at
     * the ×100 slice (the build-vs-search split is the measurement, see
     * SCALE.md round-15 PQ).

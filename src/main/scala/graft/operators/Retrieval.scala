@@ -64,7 +64,8 @@ object Retrieval {
     * per-id existence probe here, because it would cost a corpus-sized
     * action per call on the hot retrieval path. Callers needing the
     * distinction compare output qids against their request list (the
-    * Scale10 recall flows score such ids as 0 deliberately).
+    * recall@10 figures in SCALE.md round-20 score such ids as 0
+    * deliberately).
     */
   def moreLikeThis(docs: DataFrame, idCol: String, textCol: String,
       queryIds: Seq[Long], dim: Int, centroidStride: Int,

@@ -1586,7 +1586,7 @@ object PipelineOps {
     // its real job is keeping a bare count() honest: without a
     // reference to the COMPUTED column, the optimizer elides the
     // row-preserving final left join and "benchmarks" a corpus scan
-    // (measured: flat 0.3s from 5k to 500k docs in the Scale10 flow)
+    // (measured: flat 0.3s from 5k to 500k docs, SCALE.md round-14)
     (s, d) => LmQuality.bigramLogLikelihood(
       t(s, d, "documents"), "doc_id", "text")
       .filter(col("avg_ll") <= 0.0).orderBy("doc_id"),

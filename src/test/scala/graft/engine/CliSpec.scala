@@ -36,6 +36,21 @@ class CliSpec extends SparkTestBase {
       assert(err.size == 1 && err.head.startsWith("error: ") &&
         err.head.contains(s"$dir/metadata.txt"), err)
     } finally Files.delete(dir)
+    // a malformed metadata.txt: an unterminated block, and an attribute
+    // line after <end_table> that another <end_table> follows
+    for ((meta, named) <- Seq(
+        "<begin_table>\ncli_open\nA\n" -> "cli_open",
+        "<begin_table>\ncli_t\nA\n<end_table>\nB\n<end_table>\n" -> "\"B\"")) {
+      val dir = Files.createTempDirectory("graftcli")
+      val metaFile = dir.resolve("metadata.txt")
+      try {
+        Files.writeString(metaFile, meta)
+        val (code, out, err) = cli("select * from cli_t", dir.toString)
+        assert(code == 2 && out.isEmpty)
+        assert(err.size == 1 && err.head.startsWith("error: ") &&
+          err.head.contains(metaFile.toString) && err.head.contains(named), err)
+      } finally { Files.delete(metaFile); Files.delete(dir) }
+    }
     withCatalog(spark, "cli_gone" -> "1,2\n") { (dir, _) =>
       Files.delete(java.nio.file.Path.of(dir, "cli_gone.csv"))
       val (code, out, err) = cli("select * from cli_gone", dir)

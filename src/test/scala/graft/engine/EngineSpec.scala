@@ -233,6 +233,18 @@ class EngineSpec extends SparkTestBase {
     assert(cat("u").fieldNames.toSeq == Seq("z"))
   }
 
+  test("catalog parser rejects an unterminated block and a line outside " +
+    "a block, naming the table or the line") {
+    val open = intercept[IllegalArgumentException](Catalog.parse(Iterator(
+      "<begin_table>", "t", "x", "<end_table>", "<begin_table>", "u", "z")))
+    assert(open.getMessage.contains("table u") &&
+      open.getMessage.contains("no <end_table>"), open.getMessage)
+    val stray = intercept[IllegalArgumentException](Catalog.parse(Iterator(
+      "<begin_table>", "t", "x", "<end_table>", "y", "<end_table>")))
+    assert(stray.getMessage.contains("line 5") &&
+      stray.getMessage.contains("\"y\""), stray.getMessage)
+  }
+
   test("csv source reads a synthetic headerless file with given schema") {
     val dir = Files.createTempDirectory("graftcsv").toFile
     val f = new java.io.File(dir, "tt.csv")

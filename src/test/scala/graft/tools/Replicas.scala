@@ -4,11 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-/** Disjoint-shard replica generators — the data side of the Scale10
-  * decade measurements, extracted so Scale10Spec can assert the decade
-  * INVARIANTS (exact output multiples, zero cross-replica pairs, probe
-  * behavior) inside `sbt test` at small reps instead of only when
-  * someone runs tools/Scale10 by hand.
+/** Disjoint-shard replica generators — the data side of the decade
+  * measurements recorded in SCALE.md, used by Scale10Spec,
+  * SimilaritySpec and SessionizeSpec to assert the decade INVARIANTS
+  * (exact output multiples, zero cross-replica pairs, probe behavior)
+  * inside `sbt test` at small reps.
   *
   * A replica set is NOT naive duplication — 10 copies of every row
   * would plant ~45 near-dup partners per document and measure an
@@ -31,10 +31,10 @@ import org.apache.spark.sql.types.StringType
   *    sessions/as-of/interval results per user are preserved exactly
   *    and output row counts scale exactly N×.
   *
-  * Id strides default to the Scale10 values (documents 10^4, embeddings
-  * 10^5, events 10^4 users / 10^6 events) — `replicaOf` recovers the
-  * replica index from an output id, which is what the cross-replica
-  * assertions key on.
+  * Id strides are the ones the SCALE.md decades used (documents 10^4,
+  * embeddings 10^5, events 10^4 users / 10^6 events) — `replicaOf`
+  * recovers the replica index from an output id, which is what the
+  * cross-replica assertions key on.
   */
 object Replicas {
 
