@@ -61,8 +61,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(session =>
-      graft.plans.IntervalJoinRewrite(session))
+    e.injectOptimizerRule(_ => graft.plans.IntervalJoinRewrite)
     e.injectFunction((FunctionIdentifier("simhash64"),
       info("simhash64", "simhash64(text) - 64-bit simhash of whitespace tokens"),
       (args: Seq[Expression]) => SimHash64(args.head)))

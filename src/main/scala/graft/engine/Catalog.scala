@@ -14,12 +14,16 @@ object Catalog {
 
   /** Parse a metadata.txt into table -> schema, preserving attribute
     * order (the reference keys projection and star expansion off it).
-    * A block with no `<end_table>`, a line outside any block, or an
-    * `<end_table>` before a table name raises IllegalArgumentException
-    * naming the table or the line.
+    * A block with no `<end_table>`, a line outside any block, an
+    * `<end_table>` before a table name, or a second block for a table
+    * name already defined (compared case-insensitively, as Spark
+    * resolves views) raises IllegalArgumentException naming the table
+    * or the line.
     */
   def parse(lines: Iterator[String]): Map[String, StructType] = {
     val out = scala.collection.mutable.LinkedHashMap[String, StructType]()
+    // lower-cased name -> (name, line of its <begin_table>)
+    val begun = scala.collection.mutable.Map[String, (String, Int)]()
     var begin = 0 // line of the open block's <begin_table>, 0 outside one
     var table: Option[String] = None
     var cols = Vector.empty[String]
@@ -40,7 +44,13 @@ object Catalog {
       case _ =>
         if (begin == 0) malformed(s"line $n: \"$line\" is outside a " +
           "<begin_table> ... <end_table> block")
-        if (table.isEmpty) table = Some(line) else cols :+= line
+        if (table.isEmpty) {
+          val key = line.toLowerCase(java.util.Locale.ROOT)
+          for ((first, at) <- begun.get(key)) malformed(s"table $line " +
+            s"begun on line $begin repeats table $first begun on line $at")
+          begun(key) = (line, begin)
+          table = Some(line)
+        } else cols :+= line
     }
     if (begin > 0) malformed(unterminated)
     out.toMap

@@ -35,8 +35,9 @@ object Cli {
   /** Bootstrap `dir`, run `query` and print its result to `out`; the exit
     * code. A user error is one line on `err`: `parse error:` (exit 3) for
     * a query Spark cannot parse, `error:` (exit 2) for an unknown column
-    * or table, a missing or malformed catalog file, or a CSV that cannot
-    * be read as integers.
+    * or table, a missing or malformed catalog file, a CSV that cannot
+    * be read as integers, or an ANSI arithmetic error (division by zero,
+    * long overflow).
     */
   def execute(spark: SparkSession, query: String, dir: String,
       out: PrintStream, err: PrintStream): Int = {
@@ -53,6 +54,11 @@ object Cli {
       case e: FileNotFoundException =>
         fail(2, s"error: cannot read catalog ${e.getMessage}")
       case e: IllegalArgumentException =>
+        fail(2, s"error: ${firstLine(e.getMessage)}")
+      // Spark's SparkArithmeticException (DIVIDE_BY_ZERO,
+      // ARITHMETIC_OVERFLOW) is package-private; it is an
+      // ArithmeticException
+      case e: ArithmeticException =>
         fail(2, s"error: ${firstLine(e.getMessage)}")
       case e: SparkException
           if Option(e.getCondition).exists(_.startsWith("FAILED_READ_FILE")) =>

@@ -57,21 +57,12 @@ object Components {
     * a change so convergence waits for phantom chains to finish
     * populating. Throws if maxIter rounds pass without convergence
     * rather than returning a partially-propagated labelling.
-    */
-  /** `jumpsPerRound`: how many pointer jumps to chain after each
-    * propagation before the round materializes (default 1, the
-    * classic). Each extra jump squares the chain-shortening per
-    * MATERIALIZED round (labels advance 2^(jumps) hops of the
-    * representative chain), trading one more self-join inside the same
-    * action for fewer checkpoint+action rounds — the amortization dial
-    * for the fixed per-round driver cost that dominates x45/x57/x32 at
-    * small SF (the round-15 `minlabel` flow measures both settings at
-    * sf0.1 and the ×100 slice).
+    *
+    * Each round runs one pointer jump: two jumps per round measured
+    * slower at both scales (SCALE.md round-15 `minlabel`).
     */
   def minLabel(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 25, jumpsPerRound: Int = 1): DataFrame = {
-    require(jumpsPerRound >= 1,
-      s"jumpsPerRound must be >= 1, got $jumpsPerRound")
+      maxIter: Int = 25): DataFrame = {
     // symmetric adjacency: propagate across the edge in both directions
     val sym = edges.select(col("a"), col("b"))
       .union(edges.select(col("b").as("a"), col("a").as("b")))
@@ -123,26 +114,18 @@ object Components {
         .groupBy(col("id"))
         .agg(min(col("cluster")).as("cluster"), max(col("__old")).as("__old"))
       // pointer jump: my representative's representative is at least as
-      // small as mine (labels only ever decrease), so chase one hop —
-      // or several (jumpsPerRound), each a lazy self-join inside the
-      // same action, before the round pays its checkpoint. The jump
-      // reads the POST-propagation labels (fresh, not the synchronous
-      // Shiloach–Vishkin read of round-start labels): chains shorten
-      // ~(2^j)·(r+1) per round instead of ~(j+1)·r, which is what the
-      // ComponentsSpec chain dial pins for j=2.
-      var jumped = propagated
-      var jmp = 0
-      while (jmp < jumpsPerRound) {
-        val reps = jumped
-          .select(col("id").as("rid"), col("cluster").as("rcluster"))
-        jumped = jumped
-          .join(reps, jumped("cluster") === reps("rid"), "left")
-          .select(jumped("id"),
-            least(jumped("cluster"),
-              coalesce(col("rcluster"), jumped("cluster"))).as("cluster"),
-            jumped("__old"))
-        jmp += 1
-      }
+      // small as mine (labels only ever decrease), so chase one hop — a
+      // lazy self-join inside the same action, before the round pays its
+      // checkpoint. The jump reads the POST-propagation labels (fresh,
+      // not the synchronous Shiloach–Vishkin read of round-start labels).
+      val reps = propagated
+        .select(col("id").as("rid"), col("cluster").as("rcluster"))
+      val jumped = propagated
+        .join(reps, propagated("cluster") === reps("rid"), "left")
+        .select(propagated("id"),
+          least(propagated("cluster"),
+            coalesce(col("rcluster"), propagated("cluster"))).as("cluster"),
+          propagated("__old"))
       val obs = new org.apache.spark.sql.Observation(s"cc_round_$it")
       val next = jumped
         .observe(obs,
@@ -158,8 +141,6 @@ object Components {
       val n = obs.get("n").asInstanceOf[java.lang.Long].longValue
       val chg = if (n == 0L) 0L
         else obs.get("chg").asInstanceOf[java.lang.Long].longValue
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round=$it n=$n chg=$chg")
       converged = chg == 0L
       // Endgame probe: a round that changed almost nothing is very
       // likely THE fixpoint already, and confirming that used to cost
@@ -178,8 +159,6 @@ object Components {
       // unstable rather than vacuously passing. A threshold miss only
       // costs one wasted cheap action; the answer is exact either way.
       if (!converged && chg <= math.max(1L, n / 1000L)) {
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] probe at round=$it chg=$chg")
         val lb = labels
           .select(col("id").as("__bid"), col("cluster").as("__bc"))
         val la = labels
@@ -206,17 +185,8 @@ object Components {
     labels
   }
 
-  /** Dedup keep-list from near-dup pairs: one row per cluster with the
-    * keeper (min id) and the cluster size. Docs with no near-dup partner
-    * form singleton clusters and are always kept.
-    */
-  def dedupClusters(nodes: DataFrame, pairs: DataFrame): DataFrame =
-    minLabel(nodes, pairs)
-      .groupBy("cluster")
-      .agg(count(lit(1)).as("cluster_size"))
-
   /** Quality-aware survivor selection: instead of "keep the min id"
-    * (dedupClusters), keep each cluster's BEST document by a quality
+    * (minLabel's cluster label), keep each cluster's BEST document by a quality
     * score — the survivorship policy real pipelines want (dropping a
     * clean original in favor of a mangled near-copy with a smaller id
     * loses data quality for free).

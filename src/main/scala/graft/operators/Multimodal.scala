@@ -59,32 +59,6 @@ object Multimodal {
       }
   }
 
-  /** Resized-image metadata + a fixed-size feature vector. STUB resample:
-    * a real implementation hands the payload to a resize kernel; the fake
-    * derives a deterministic dim-`featDim` embedding from rolling byte
-    * windows so the downstream plumbing (fixed-width array schema, ANN
-    * compatibility) is exercised for real.
-    */
-  case class ResizedMedia(mediaId: Long, width: Int, height: Int,
-      features: Array[Float])
-
-  def resizeAndFeaturize(spark: SparkSession, binDf: DataFrame,
-      targetW: Int, targetH: Int, featDim: Int): Dataset[ResizedMedia] = {
-    import spark.implicits._
-    binDf.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val feats = new Array[Float](featDim)
-          var i = 0
-          while (i < bytes.length) {
-            feats(i % featDim) += (bytes(i) & 0xff) / 255.0f
-            i += 1
-          }
-          ResizedMedia(id, targetW, targetH, feats)
-        }
-      }
-  }
-
   /** Frame sampling for video-ish payloads: emit every `stride`-th chunk
     * of `frameBytes` bytes as its own row (media_id, frame_idx, digest,
     * n_bytes) — the explode-shaped operator a frame pipeline needs. The

@@ -8,26 +8,18 @@ import org.apache.spark.sql.functions._
   * training: given per-document quality scores (TextAnalysis
   * .qualityScore, LmQuality, Repetition), KEEP the best fraction of
   * each group (CCNet keeps the best perplexity tertile per language;
-  * Wenzek et al. 2020 §4.3). Two formulations:
-  *
-  *  - `topFraction` (exact, the graded form): the cut is an ORDER
-  *    STATISTIC — the score at rank ceil(n·fraction) per group,
-  *    descending — and everything scoring >= the cut is kept, ties
-  *    included. No percentile interpolation anywhere: interpolated
-  *    quantiles ((b-a)·frac arithmetic) are not bit-reproducible
-  *    across engines for arbitrary 4-decimal scores (s37 works
-  *    because whole-number quantities interpolate to exact halves),
-  *    while rank selection + equality-compare of already-rounded
-  *    scores is. Uses one rank window per group — fine when groups
-  *    are languages/sources (bounded count, millions of rows each),
-  *    and the window sort is per-GROUP, so a hot language serializes:
-  *    that is the approx path's job.
-  *  - `thresholdApprox` (the 100 TB path): per-group
-  *    approx_percentile sketch -> broadcast cut -> one map-side
-  *    filter pass. No sort anywhere; the sketch is mergeable map-side
-  *    partial state. Within-epsilon of the exact cut (spec-asserted),
-  *    not hash-reproducible across engines — which is why it is the
-  *    scale path and not the oracle path.
+  * Wenzek et al. 2020 §4.3). The cut is an ORDER STATISTIC — the score
+  * at rank ceil(n·fraction) per group, descending — and everything
+  * scoring >= the cut is kept, ties included. No percentile
+  * interpolation anywhere: interpolated quantiles ((b-a)·frac
+  * arithmetic) are not bit-reproducible across engines for arbitrary
+  * 4-decimal scores (s37 works because whole-number quantities
+  * interpolate to exact halves), while rank selection + equality-compare
+  * of already-rounded scores is. Uses one rank window per group — fine
+  * when groups are languages/sources (bounded count, millions of rows
+  * each); the window sort is per-GROUP, so a hot language serializes
+  * its own sort; SCALE.md round 16 records what a sketched cut
+  * (approx_percentile, one filter pass, no sort) buys there.
   */
 object QualitySelect {
 
@@ -69,11 +61,9 @@ object QualitySelect {
     *
     * Scale shape: one rank window per group — groups are domains
     * (bounded count, bounded mass), and a hot group serializes its own
-    * sort exactly like topFraction's exact form; the sketch-based
-    * escape hatch is capPerGroupApprox below (grid-sketch the cap'th
-    * score, one filter pass, no sort), at the cost of the hard budget
-    * becoming approximate — which is why the exact window IS the
-    * graded form.
+    * sort exactly like topFraction. A sketched cut would remove the
+    * sort but make the hard budget approximate, so the exact window is
+    * the graded form (x55).
     */
   def capPerGroup(
       scored: DataFrame, idCol: String, scoreCol: String,
@@ -88,54 +78,6 @@ object QualitySelect {
       .withColumn("rn", row_number().over(byScore).cast("long"))
       .select(col(idCol), col(groupCol), col(scoreCol), col("rn"),
         (col("rn") <= cap).as("keep"))
-  }
-
-  /** Approximate per-group cap — capPerGroup's documented escape hatch,
-    * now code: estimate the cap'th-best score per group from a
-    * percentile sketch and keep everything scoring >= it, removing the
-    * per-group rank sort entirely (one hash-aggregate with mergeable
-    * map-side sketch partials + a broadcast join + a filter pass — the
-    * shape a hot domain cannot serialize).
-    *
-    * The group-specific quantile 1 - cap/n cannot feed approx_percentile
-    * directly (its percentage argument must be foldable), so the
-    * aggregate sketches a FIXED grid of gridSteps+1 quantiles once per
-    * group and the group's own count then INDEXES the grid, snapping the
-    * quantile DOWN. Only the grid snap is one-sided, so the result is a
-    * superset of the exact capPerGroup rows UP TO SKETCH ERROR: the
-    * snap itself errs permissive, but approx_percentile's rank error
-    * (~n/accuracy) can push the estimated cut above the true cap'th
-    * score and drop rows the exact form keeps — at the default
-    * accuracy=10000 the spec pins the superset on the test corpus, not
-    * as a construction guarantee. Overshoot is bounded by the grid
-    * cell (~n/gridSteps rows) plus sketch error plus ties. That is the
-    * documented trade: the hard row budget becomes approximate, which
-    * is why the exact window form stays the graded one (x55) and this
-    * is the 100 TB fallback when one group owns the corpus. Groups with
-    * n <= cap keep everything (cut is NULL), exactly like the exact
-    * form.
-    */
-  def capPerGroupApprox(
-      scored: DataFrame, idCol: String, scoreCol: String,
-      groupCol: String, cap: Int, gridSteps: Int = 1000,
-      accuracy: Int = 10000): DataFrame = {
-    require(cap >= 1, "cap must be >= 1")
-    require(gridSteps >= 10, "gridSteps must be >= 10")
-    Seq("cut", "keep", "__n", "__grid").foreach(c =>
-      require(idCol != c && scoreCol != c && groupCol != c,
-        s"QualitySelect.capPerGroupApprox reserves column name '$c'"))
-    val qs = typedlit((0 to gridSteps).map(_.toDouble / gridSteps))
-    val cuts = scored.groupBy(col(groupCol))
-      .agg(count(lit(1)).as("__n"),
-        percentile_approx(col(scoreCol), qs, lit(accuracy)).as("__grid"))
-      .select(col(groupCol),
-        when(col("__n") <= cap, lit(null).cast("double"))
-          .otherwise(element_at(col("__grid"),
-            (floor((lit(1.0) - lit(cap.toDouble) / col("__n"))
-              * gridSteps) + 1).cast("int"))).as("cut"))
-    scored.join(broadcast(cuts), Seq(groupCol))
-      .select(col(idCol), col(groupCol), col(scoreCol), col("cut"),
-        (col("cut").isNull || col(scoreCol) >= col("cut")).as("keep"))
   }
 
   /** Token-budget corpus selection: keep the highest-quality documents,
@@ -180,8 +122,8 @@ object QualitySelect {
     * keeps both union branches (and the SQL twin) agreeing on every
     * row. Degenerate corpora where one score value owns most rows
     * serialize step 4's slice window — real-valued quantized quality
-    * scores don't do this; a constant score column wants
-    * thresholdApprox-style sketching, not an exact budget.
+    * scores don't do this; a constant score column wants a sketched
+    * cut, not an exact budget.
     */
   def selectByTokenBudget(
       scored: DataFrame, idCol: String, scoreCol: String,
@@ -228,24 +170,5 @@ object QualitySelect {
       .select(col(idCol), col(scoreCol), col(tokenCol), col("cut"),
         (col("__bc") <= col("__rem")).as("keep"))
     verdict.unionByName(atCut)
-  }
-
-  /** Approximate threshold selection — the scale path: per-group
-    * percentile sketch (one hash-aggregate, mergeable partials),
-    * broadcast the tiny cut table, one filter pass. `accuracy` is
-    * approx_percentile's inverse-epsilon knob.
-    */
-  def thresholdApprox(
-      scored: DataFrame, idCol: String, scoreCol: String,
-      groupCol: String, fracDenom: Int,
-      accuracy: Int = 10000): DataFrame = {
-    require(fracDenom >= 1, "fraction denominator must be >= 1")
-    val q = 1.0 - 1.0 / fracDenom
-    val cuts = scored.groupBy(col(groupCol))
-      .agg(percentile_approx(col(scoreCol), lit(q), lit(accuracy))
-        .as("cut"))
-    scored.join(broadcast(cuts), Seq(groupCol))
-      .select(col(idCol), col(groupCol), col(scoreCol), col("cut"),
-        (col(scoreCol) >= col("cut")).as("keep"))
   }
 }

@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
   * never straddle an argmin boundary. At loose thresholds (~0.4,
   * merely-correlated pairs) recall collapses with nlist (0.42 → 0.08)
   * — there the right operator is the similarity-calibrated sign-band
-  * LSH (Similarity.signBandNearDupPairs / autoBandNearDupPairs), not
+  * LSH (Similarity.chooseBandConfig + signBandNearDupPairs), not
   * cell blocking.
   */
 object SemanticDedup {

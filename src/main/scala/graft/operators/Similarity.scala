@@ -232,8 +232,8 @@ object Similarity {
   /** The `nprobe` nearest centroid ids for a vector, nearest first —
     * the query-side half of IVF search. NearestCells native since
     * round 14: the literal-structs formulation was fine while probes
-    * ran only over a small query frame, but corpus-wide self-kNN
-    * (selfKnnLabelAgreementByCell — every row probes) put an O(nlist)
+    * ran only over a small query frame, but corpus-wide blocking
+    * (contrastivePairsByCell — every row probes) put an O(nlist)
     * interpreted struct sort on the corpus path and an O(nlist) plan
     * on every consumer, the exact promotion trigger its old scaladoc
     * named. Identical semantics (SimilaritySpec pins parity against
@@ -277,8 +277,9 @@ object Similarity {
     * different blocking family, not a bigger nprobe. Corpora whose
     * growth adds locally-clustered structure (real web/embedding
     * drift, the IVF operating assumption, x33's ivfrecall regime) are
-    * where the ln rule holds fidelity; SimilaritySpec pins the ≥90%
-    * floor at the graded SF.
+    * where the ln rule holds fidelity. These numbers are SCALE.md
+    * records of blocked 1-NN agreement; PqSpec and the
+    * contrastivePairsByCell law size their nprobe with this rule.
     */
   def nprobeForNlist(nlist: Int, base: Int = 4, c: Double = 2.0): Int = {
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
@@ -394,9 +395,9 @@ object Similarity {
     * fused pass — zero joins, zero shuffles beyond a parallelizing
     * round-robin. The bound is the n² ARITHMETIC, not memory: measured
     * 0.95s at 2k and 250s at 200k vectors (SCALE.md round-14) — so
-    * this form is for eval sets (≲10⁴·5 vectors);
-    * corpus-scale self-kNN is selfKnnLabelAgreementByCell below,
-    * measured ~linear at fixed cell size.
+    * this form is for eval sets (≲10⁴·5 vectors); SCALE.md round-14
+    * records an IVF-cell-blocked form at corpus scale (~linear at
+    * fixed cell size).
     */
   def knnLabelAgreement(corpus: DataFrame, idCol: String,
       vecCol: String, labelCol: String): DataFrame = {
@@ -429,87 +430,6 @@ object Similarity {
         col("best.nn_label").as("nn_label"),
         round(col("best.sim"), 6).as("sim"))
       .withColumn("agree", col("label") === col("nn_label"))
-  }
-
-  /** Corpus-scale self-1-NN label agreement, IVF-cell-blocked: assign
-    * every vector to its nearest cell (one map pass over broadcast
-    * centroid instance data), explode each vector's `nprobe` probe
-    * cells, and equi-join probes to assignments on the cell id — a
-    * PLAIN join, not a broadcast: both sides are the corpus, so AQE
-    * picks the shuffle strategy, and the per-cell pair mass is
-    * |cell|²·nprobe/nlist of the all-pairs square. Approximate exactly
-    * like IVF search (a true nearest neighbor in an unprobed cell is
-    * missed — the same recall/cost dial as ivfTopK, measured against
-    * the exact form in the scale flows).
-    *
-    * Output contract difference from the exact form: a vector whose
-    * probed cells contain NO other vector (alone in its cell, other
-    * probes empty) emits no row — the exact form always emits one
-    * verdict per vector. Rate computations must therefore use this
-    * frame's own row count as the denominator, or compare agree
-    * COUNTS (what SCALE.md's fidelity numbers do), never divide by
-    * the corpus size.
-    */
-  def selfKnnLabelAgreementByCell(corpus: DataFrame, idCol: String,
-      vecCol: String, labelCol: String,
-      centroids: Seq[(Int, Array[Double])], nprobe: Int): DataFrame = {
-    val e = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      col(labelCol).as("label"))
-    val assigned = ivfAssign(e, "vec", centroids)
-    val probes = e
-      .select(col("id").as("qid"), col("vec").as("qvec"))
-      .withColumn("cell",
-        explode(ivfProbeCells(col("qvec"), centroids, nprobe)))
-    labeledAgreement(e, top1(assigned.join(probes, Seq("cell"))))
-  }
-
-  /** Top-1 as an AGGREGATE, not a rank window: argmax by (sim desc, id
-    * asc) via max_by over the tie-break struct (sim, -id) — the same
-    * rounding and ordering contract as scoredTopK's k=1 row (x54's
-    * oracle replays the window formulation and hash-matches this one),
-    * but with map-side partial combine: each partition reduces its
-    * candidate slice to ONE row per query before any exchange, so the
-    * n·m scored pairs never shuffle (measured at sf0.1: the window
-    * form's 4M-row exchange+sort made x54 a 9 s query; this form is
-    * the same query at a fraction of that — see SCALE.md).
-    */
-  private def top1(joined: DataFrame): DataFrame =
-    joined
-      .filter(col("qid") =!= col("id"))
-      .select(col("qid"), col("id"),
-        round(cosine(col("qvec"), col("vec")), 6).as("sim"))
-      .groupBy("qid")
-      .agg(max_by(struct(col("id"), col("sim")),
-        struct(col("sim"), (-col("id")).as("t"))).as("best"))
-      .select(col("qid"), col("best.id").as("id"), col("best.sim").as("sim"))
-
-  /** Shared tail: attach both endpoints' labels to a top-1 result and
-    * emit the per-vector agreement verdict.
-    */
-  private def labeledAgreement(e: DataFrame, top1: DataFrame): DataFrame =
-    top1
-      .join(e.select(col("id").as("qid"), col("label")), "qid")
-      .join(e.select(col("id"), col("label").as("nn_label")), "id")
-      .select(col("qid").as("vec_id"), col("label"),
-        col("id").as("nn_id"), col("nn_label"), col("sim"),
-        (col("label") === col("nn_label")).as("agree"))
-
-  /** Pairwise near-duplicate vectors: all (a<b) pairs with cosine >=
-    * threshold, blocked by LSH bucket to avoid the full cross product
-    * (pairs split across buckets are missed — recall tested vs brute).
-    */
-  def cosineNearDupPairs(
-      corpus: DataFrame, threshold: Double, nPlanes: Int,
-      dim: Int): DataFrame = {
-    val cb = corpus.withColumn("bucket", lshBucket(col("vec"), nPlanes, dim))
-    val a = cb.select(col("id").as("id_a"), col("vec").as("vec_a"),
-      col("bucket").as("bk_a"))
-    val b = cb.select(col("id").as("id_b"), col("vec").as("vec_b"),
-      col("bucket").as("bk_b"))
-    a.join(b, col("bk_a") === col("bk_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("vec_a"), col("vec_b")), 6).as("sim"))
-      .filter(col("sim") >= threshold)
   }
 
   /** Axis-sign LSH band signatures: band k packs the sign bits of
@@ -621,23 +541,6 @@ object Similarity {
     selectBandConfig(bandConcentration(corpus, vecCol, configs),
       maxCandidatesPerRow)
 
-  /** signBandNearDupPairs with (bands, rowsPerBand) chosen from the
-    * measured band-signature concentration instead of a static setting —
-    * the scale path for corpora whose sign distribution is unknown.
-    * Costs one extra aggregation job (the probe) before the pipeline.
-    * `idCol`/`vecCol` name the input columns (the output is always
-    * (id_a, id_b, sim), matching signBandNearDupPairs).
-    */
-  def autoBandNearDupPairs(
-      corpus: DataFrame, threshold: Double,
-      configs: Seq[(Int, Int)] = defaultBandLadder,
-      maxCandidatesPerRow: Double = 48.0,
-      idCol: String = "id", vecCol: String = "vec"): DataFrame = {
-    val std = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val (b, r) = chooseBandConfig(std, "vec", configs, maxCandidatesPerRow)
-    signBandNearDupPairs(std, threshold, b, r)
-  }
-
   /** Embedding near-dup pairs at scale: candidates = pairs colliding on
     * ANY sign band (banding trades precision for recall exactly as in
     * MinHash banding), verified with exact cosine >= threshold. ONE
@@ -651,8 +554,8 @@ object Similarity {
     * is a property of the corpus's sign distribution, and SCALE.md's
     * measured decade shows the wrong static guess ((4,4) on a
     * concentrated distribution) costing 149x per 10x. Set the bands from
-    * chooseBandConfig, or call autoBandNearDupPairs to probe-and-select
-    * in one step; (4,4) remains the graded x10 oracle setting.
+    * chooseBandConfig (x10b passes its choice here); (4,4) remains the
+    * graded x10 oracle setting.
     */
   def signBandNearDupPairs(
       corpus: DataFrame, threshold: Double,
@@ -718,8 +621,8 @@ object Similarity {
     * and candidate generation is IVF-cell blocked instead of the
     * broadcast square — each anchor is compared only against vectors
     * whose assigned cell is among the anchor's `nprobe` nearest
-    * centroids (the selfKnnLabelAgreementByCell composition the
-    * graded x72 scaladoc promised). WHICH rows are compared changes,
+    * centroids (the IVF-blocked composition the graded x72 scaladoc
+    * promised). WHICH rows are compared changes,
     * the scoring never does: with nprobe = nlist every corpus cell is
     * probed and the output equals contrastivePairs over the full
     * anchor set row-for-row (spec-pinned equivalence law, the
@@ -733,8 +636,7 @@ object Similarity {
     * of the anchor side — anchors ARE the corpus here; the join is
     * shuffle-parallel on cell and the window on (qid, kind).
     *
-    * Output contract difference from the exact form (the
-    * selfKnnLabelAgreementByCell caveat, verbatim): an anchor with no
+    * Output contract difference from the exact form: an anchor with no
     * candidate of a kind in its probed cells emits no row of that
     * kind; rate computations must use this frame's own rows, never
     * the corpus size.
@@ -772,7 +674,7 @@ object Similarity {
   /** Label-centroid outlier scoring: each vector's squared L2 distance
     * to its OWN label's mean vector, plus its within-label outlier rank
     * (1 = farthest). The nearest-class-mean cousin of
-    * selfKnnLabelAgreement's 1-NN probe: where 1-NN asks "does my
+    * knnLabelAgreement's 1-NN probe: where 1-NN asks "does my
     * nearest neighbor agree with my label", this asks "how far am I
     * from my class's center" — the cheap first-pass filter for
     * mislabeled / out-of-distribution rows in an embedded dataset

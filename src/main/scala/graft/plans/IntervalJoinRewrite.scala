@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -20,17 +19,13 @@ import org.apache.spark.sql.types.LongType
   *
   * Fires only on an exact two-conjunct condition (one equality, one
   * abs-range with a positive literal width), so the rewritten join —
-  * which carries three conjuncts — never re-fires. Disable with
-  * spark.graft.rewrite.intervalJoin=false.
+  * which carries three conjuncts — never re-fires. The same join
+  * written as two one-sided bounds (a.t - b.t <= w AND b.t - a.t <= w)
+  * does not match and plans as Spark would without the rule.
   */
-case class IntervalJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+object IntervalJoinRewrite extends Rule[LogicalPlan] {
 
-  private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.rewrite.intervalJoin")
-      .forall(_.toBoolean)
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint) =>
         // exactly two conjuncts, one equality + one abs-range, in either
@@ -48,7 +43,6 @@ case class IntervalJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           case _ => j
         }
     }
-  }
 
   private def splitConjunctivePredicates(e: Expression): Seq[Expression] =
     e match {

@@ -313,7 +313,7 @@ object PipelineOps {
     })
 
   /** Embedding near-dups with the band config chosen by the MEASURED
-    * band-signature concentration (Similarity.autoBandNearDupPairs) —
+    * band-signature concentration (Similarity.chooseBandConfig) —
     * the scale path x10's static (4,4) is not: SCALE.md's 10x decade
     * measured (4,4) at 149x per decade on this corpus's concentrated
     * sign distribution vs 5.6x at (8,8). The probe's masses here are
@@ -329,14 +329,14 @@ object PipelineOps {
     (s, d) => {
       val e = t(s, d, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      // the probe's choice made explicit (this IS autoBandNearDupPairs's
-      // body) so a drifted probe fails with a direct message instead of
+      // the probe's choice checked before the pipeline runs, so a
+      // drifted probe fails with a direct message instead of
       // an opaque oracle hash mismatch — the SQL below replays (8,8).
       // Deliberately a runtime require, not (only) a spec pin: a fixture
       // regeneration or budget tweak must fail THIS query loudly in
       // Verify/Bench (where the stale oracle would otherwise mis-grade),
       // not just in a test that nobody reruns against new fixtures.
-      // SimilaritySpec additionally pins auto == (8,8) on its own data.
+      // SimilaritySpec additionally pins the (8,8) choice on its own data.
       val chosen = Similarity.chooseBandConfig(e, "vec")
       require(chosen == ((8, 8)),
         s"x10b's oracle replays (8,8) but the probe chose $chosen — " +

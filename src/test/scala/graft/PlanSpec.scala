@@ -210,14 +210,44 @@ class PlanSpec extends SparkTestBase {
     * per-shard size aggregate (grouping on Ranking's __pid working
     * column) — a frame of ≤ shards ~ parallelism rows BY CONSTRUCTION,
     * the same bounded-summary class as the repo's histogram windows.
+    * Only unary nodes (projections, filters) may sit between the window
+    * and that aggregate: a join or union in between can bring
+    * corpus-sized rows into the window's input, so it fails the
+    * exemption even when one of its sides is the __pid aggregate.
     */
   private def isBoundedOffsetsWindow(
-      w: org.apache.spark.sql.catalyst.plans.logical.Window): Boolean =
-    w.child.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-        if a.groupingExpressions.exists(
-          _.references.exists(_.name == "__pid")) => a
-    }.nonEmpty
+      w: org.apache.spark.sql.catalyst.plans.logical.Window): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate,
+      LogicalPlan, UnaryNode}
+    @scala.annotation.tailrec
+    def reachesPidAggregate(p: LogicalPlan): Boolean = p match {
+      case a: Aggregate if a.groupingExpressions.exists(
+        _.references.exists(_.name == "__pid")) => true
+      case u: UnaryNode => reachesPidAggregate(u.child)
+      case _ => false
+    }
+    reachesPidAggregate(w.child)
+  }
+
+  test("the bounded-offsets exemption needs the __pid aggregate below " +
+    "the window through unary nodes only — a join in between fails it") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    val rows = spark.range(1000).select(col("id"),
+      (col("id") % 4).as("__pid"))
+    val sizes = rows.groupBy(col("__pid")).agg(count(lit(1)).as("n"))
+    val offsets = Window.orderBy(col("__pid"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val direct = windowsOf(sizes.withColumn("off", sum(col("n")).over(offsets)))
+    assert(direct.size == 1 && direct.forall(isBoundedOffsetsWindow),
+      s"window over the __pid aggregate must be exempt: $direct")
+    val overJoin = windowsOf(sizes.join(rows, "__pid")
+      .withColumn("off", sum(col("n")).over(offsets)))
+    assert(overJoin.size == 1 && overJoin.forall(_.partitionSpec.isEmpty))
+    assert(!overJoin.exists(isBoundedOffsetsWindow),
+      s"a join between the window and the __pid aggregate was exempted: " +
+        overJoin)
+  }
 
   test("x25: vocab ranking plans no corpus-scale unpartitioned window " +
     "(the global ordinal is range-shard + local rank + bounded offsets)") {
@@ -610,8 +640,8 @@ class PlanSpec extends SparkTestBase {
     assert(!plan.contains("Join"), plan)
   }
 
-  test("x54: exact form is the deliberate broadcast square; the " +
-    "cell-blocked scale path plans only equi-joins") {
+  test("x54: exact form is the deliberate broadcast square — one " +
+    "instance-data pass, no window, no join") {
     val exact = q("x54_knn_label_agree")
     // the all-pairs square lives INSIDE the NearestNeighborCosine
     // instance-data pass: no window, no join of ANY kind, no pair row
@@ -628,22 +658,6 @@ class PlanSpec extends SparkTestBase {
     // exactly ONE evaluation of the native — a pushed filter or a
     // collapsed projection would clone the quadratic pass
     assert("nearest_neighbor_cosine".r.findAllIn(plan).size == 1, plan)
-
-    val e = graft.Tables.load(spark, sfDir, "embeddings")
-    val cents = e.filter(org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.col("vec_id"),
-        org.apache.spark.sql.functions.lit(97)) === 0)
-      .orderBy("vec_id").limit(8).collect()
-      .zipWithIndex.map { case (r, i) =>
-        (i, r.getSeq[Float](r.fieldIndex("embedding"))
-          .map(_.toDouble).toArray)
-      }.toSeq
-    val blocked = graft.operators.Similarity.selfKnnLabelAgreementByCell(
-      e, "vec_id", "embedding", "label", cents, nprobe = 2)
-    val bplan = planOf(blocked)
-    assert(!bplan.contains("BroadcastNestedLoopJoin") &&
-      !bplan.contains("CartesianProduct"),
-      s"cell blocking degenerated to an all-pairs square:\n$bplan")
   }
 
   test("x55: the source cap ranks within sources — never an " +

@@ -36,11 +36,15 @@ class CliSpec extends SparkTestBase {
       assert(err.size == 1 && err.head.startsWith("error: ") &&
         err.head.contains(s"$dir/metadata.txt"), err)
     } finally Files.delete(dir)
-    // a malformed metadata.txt: an unterminated block, and an attribute
-    // line after <end_table> that another <end_table> follows
+    // a malformed metadata.txt: an unterminated block, an attribute
+    // line after <end_table> that another <end_table> follows, and a
+    // second block for a table name already defined
     for ((meta, named) <- Seq(
         "<begin_table>\ncli_open\nA\n" -> "cli_open",
-        "<begin_table>\ncli_t\nA\n<end_table>\nB\n<end_table>\n" -> "\"B\"")) {
+        "<begin_table>\ncli_t\nA\n<end_table>\nB\n<end_table>\n" -> "\"B\"",
+        "<begin_table>\ncli_t\nA\nB\n<end_table>\n" +
+          "<begin_table>\nCLI_T\nC\n<end_table>\n" ->
+          "CLI_T begun on line 6 repeats table cli_t begun on line 1")) {
       val dir = Files.createTempDirectory("graftcli")
       val metaFile = dir.resolve("metadata.txt")
       try {
@@ -66,6 +70,20 @@ class CliSpec extends SparkTestBase {
       assert(code == 2 && out.isEmpty)
       assert(err.size == 1 && err.head.startsWith("error: ") &&
         err.head.contains("cli_bad.csv"), err)
+    }
+  }
+
+  test("division by zero and long overflow are one error line, exit 2") {
+    withCatalog(spark, "cli_ansi" -> "1,2\n3,4\n") { (dir, _) =>
+      for ((query, condition) <- Seq(
+          "select p/0 from cli_ansi" -> "DIVIDE_BY_ZERO",
+          "select sum(p*9223372036854775807) from cli_ansi" ->
+            "ARITHMETIC_OVERFLOW")) {
+        val (code, out, err) = cli(query, dir)
+        assert(code == 2 && out.isEmpty, s"$query: exit $code, $out")
+        assert(err.size == 1 && err.head.startsWith("error: ") &&
+          err.head.contains(condition), s"$query: $err")
+      }
     }
   }
 

@@ -243,6 +243,13 @@ class EngineSpec extends SparkTestBase {
       "<begin_table>", "t", "x", "<end_table>", "y", "<end_table>")))
     assert(stray.getMessage.contains("line 5") &&
       stray.getMessage.contains("\"y\""), stray.getMessage)
+    // a second block for the same name, in any case, would silently
+    // replace the first: both <begin_table> lines are named
+    val dup = intercept[IllegalArgumentException](Catalog.parse(Iterator(
+      "<begin_table>", "t", "x", "<end_table>",
+      "<begin_table>", "T", "y", "<end_table>")))
+    assert(dup.getMessage.contains("line 5") &&
+      dup.getMessage.contains("line 1"), dup.getMessage)
   }
 
   test("csv source reads a synthetic headerless file with given schema") {

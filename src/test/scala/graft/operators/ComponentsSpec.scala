@@ -30,36 +30,9 @@ class ComponentsSpec extends SparkTestBase {
     assert(got.values.toSet == Set(1L))
   }
 
-  test("jumpsPerRound=2 yields identical labels in fewer materialized " +
-    "rounds (chain advances 4 hops per round)") {
-    val n = 40L
-    val nodes = (1L to n).toDF("id")
-    val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
-    val one = Components.minLabel(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // diameter 39: double jump must land inside 5 rounds (propagation
-    // + two jumps shortens chains ~4x per materialized round), where
-    // the single jump needs ~7
-    val two = Components.minLabel(nodes, edges, maxIter = 5,
-        jumpsPerRound = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(one == two && two.values.toSet == Set(1L))
-    intercept[IllegalArgumentException] {
-      Components.minLabel(nodes, edges, jumpsPerRound = 0)
-    }
-  }
-
   test("edge orientation and duplicate edges do not matter") {
     val a = labelsOf(Seq(1L, 2L, 3L), Seq((3L, 1L), (1L, 3L), (2L, 3L)))
     assert(a == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
-  }
-
-  test("dedupClusters sizes: clique of 3 + pair + singleton") {
-    val sizes = Components.dedupClusters(
-      Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("id"),
-      Seq((1L, 2L), (2L, 3L), (1L, 3L), (5L, 6L)).toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sizes == Map(1L -> 3L, 4L -> 1L, 5L -> 2L))
   }
 
   test("canonicalByScore keeps the best-score doc per cluster, NOT the " +

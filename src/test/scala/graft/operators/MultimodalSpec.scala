@@ -38,20 +38,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(Multimodal.fakeDecode(x) == Multimodal.fakeDecode(x.clone()))
   }
 
-  test("resizeAndFeaturize emits fixed-width vectors usable by the ANN ops") {
-    val out = Multimodal.resizeAndFeaturize(spark, bin, 224, 224, 16)
-    val rows = out.collect()
-    assert(rows.length == 50)
-    assert(rows.forall(_.features.length == 16))
-    assert(rows.forall(r => r.width == 224 && r.height == 224))
-    // vectors feed straight into the similarity operator
-    val df = out.toDF().select(col("mediaId").as("id"),
-      col("features").as("vec"))
-    val q = df.limit(1).select(col("id").as("qid"), col("vec").as("qvec"))
-    val top = Similarity.bruteForceTopK(q, df, 3)
-    assert(top.count() == 3)
-  }
-
   test("sampleFrames explodes payloads into ordered per-frame rows") {
     val frames = Multimodal.sampleFrames(spark, bin, frameBytes = 64,
       stride = 2).collect()

@@ -253,7 +253,8 @@ class PqSpec extends SparkTestBase {
     val mem = Pq.ivfPqIndex(emb, "id", "vec", 64, cells, cbs)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-pq-index").toString
-    graft.sources.Sinks.writePartitioned(mem, dir, Seq("cell"))
+    mem.repartition(col("cell")).write.mode("overwrite")
+      .partitionBy("cell").parquet(dir)
     val disk = spark.read.parquet(dir)
     def run(idx: org.apache.spark.sql.DataFrame) =
       Pq.ivfPqTopKIndexed(idx, emb, "id", "vec", 64, cells, cbs,

@@ -40,74 +40,6 @@ class QualitySelectSpec extends SparkTestBase {
     assert(e.getMessage.contains("reserves"))
   }
 
-  test("capPerGroupApprox keeps a SUPERSET of the exact cap within the " +
-    "grid-cell overshoot bound; small groups keep everything") {
-    // group a: 10 distinct scores, cap 3; group b: n <= cap
-    val rows = (1L to 10L).map(i => (i, "a", i / 10.0)) ++
-      Seq((11L, "b", 0.5), (12L, "b", 0.4))
-    val df = scored(rows: _*)
-    val exact = keeps(QualitySelect.capPerGroup(df, "id", "score", "grp", 3))
-    val approx = keeps(QualitySelect.capPerGroupApprox(
-      df, "id", "score", "grp", 3))
-    assert(exact.subsetOf(approx), s"exact $exact not in approx $approx")
-    // permissive snap overshoots by at most ceil(n/gridSteps)+1 rows per
-    // group at exact-sketch accuracy; here that bound is 2 across groups
-    assert(approx.size <= exact.size + 2, s"approx kept $approx")
-    assert(Set(11L, 12L).subsetOf(approx)) // n <= cap -> all kept
-    // every kept row outscores every dropped row within each group
-    val out = QualitySelect.capPerGroupApprox(df, "id", "score", "grp", 3)
-      .filter(col("grp") === "a").collect()
-      .map(r => (r.getLong(0), r.getDouble(2), r.getBoolean(4)))
-    val keptMin = out.filter(_._3).map(_._2).min
-    val dropMax = out.filterNot(_._3).map(_._2).max
-    assert(keptMin > dropMax)
-  }
-
-  test("capPerGroupApprox matches capPerGroup's kept count on the " +
-    "graded slice within the documented overshoot") {
-    val docs = graft.Tables.load(spark, sfDir, "documents")
-    val sc = docs.select(col("doc_id"), col("source"),
-      round(TextAnalysis.qualityScore(
-        col("text"), TextAnalysis.langMarkers("en")), 4).as("score"))
-    def kept(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.filter(col("keep")).select("doc_id").collect()
-        .map(_.getLong(0)).toSet
-    val exact = kept(QualitySelect.capPerGroup(
-      sc, "doc_id", "score", "source", 20))
-    val approx = kept(QualitySelect.capPerGroupApprox(
-      sc, "doc_id", "score", "source", 20))
-    assert(exact.subsetOf(approx))
-    val nGroups = sc.select("source").distinct().count()
-    val maxN = sc.groupBy("source").count()
-      .agg(max("count")).head().getLong(0)
-    // per-group overshoot: grid cell (n/1000) + ties at the 4-decimal cut
-    // — scores collide heavily at 4 decimals, so allow the tie mass
-    assert(approx.size <= exact.size + nGroups * (maxN / 1000 + 1) +
-      sc.count() / 10, s"exact ${exact.size}, approx ${approx.size}")
-  }
-
-  test("thresholdApprox lands within a row of the exact selection on " +
-    "the graded slice (the scale path tracks the oracle path)") {
-    val docs = graft.Tables.load(spark, sfDir, "documents")
-    val sc = docs.select(col("doc_id"), col("lang"),
-      round(TextAnalysis.qualityScore(
-        col("text"), TextAnalysis.langMarkers("en")), 4).as("score"))
-    val exact = QualitySelect
-      .topFraction(sc, "doc_id", "score", "lang", 3)
-      .filter(col("keep")).groupBy("lang").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val approx = QualitySelect
-      .thresholdApprox(sc, "doc_id", "score", "lang", 3)
-      .filter(col("keep")).groupBy("lang").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(exact.keySet == approx.keySet)
-    // at accuracy 10000 on ~hundred-doc groups the sketch cut should
-    // reproduce the exact cut (ties aside) — allow a tiny band
-    for ((lang, n) <- exact)
-      assert(math.abs(approx(lang) - n) <= math.max(2L, n / 10),
-        s"$lang: exact kept $n, approx kept ${approx(lang)}")
-  }
-
   private def budgeted(rows: (Long, Double, Long)*) =
     rows.toDF("id", "score", "tokens")
 

@@ -325,17 +325,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(chosen == (8, 8), s"expected (8,8) on this corpus: $stats")
   }
 
-  test("autoBandNearDupPairs returns exactly the (8,8) pipeline's pairs " +
-    "on the embeddings corpus") {
-    val corpus = emb.select(col("vec_id").as("id"),
-      col("embedding").as("vec"))
-    val auto = Similarity.autoBandNearDupPairs(corpus, 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fixed = Similarity.signBandNearDupPairs(corpus, 0.3, 8, 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto == fixed && auto.nonEmpty)
-  }
-
   test("(8,8) bands keep FULL recall for true near-duplicates: a " +
     "sign-preserving perturbation (cos ~0.999) collides on every band") {
     // the SCALE.md claim under test: wide bands lose recall only at LOW
@@ -529,71 +518,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(e.getMessage != null &&
       (e.getMessage.contains("dimension") || e.getMessage.contains("dims")),
       s"unexpected failure shape: $e")
-  }
-
-  private def knnCentroids(n: Int): Seq[(Int, Array[Double])] =
-    emb.filter(pmod(col("vec_id"), lit(97)) === 0)
-      .orderBy("vec_id").limit(n).collect()
-      .zipWithIndex.map { case (r, i) =>
-        (i, r.getSeq[Float](r.fieldIndex("embedding"))
-          .map(_.toDouble).toArray)
-      }.toSeq
-
-  test("cell-blocked self-kNN with every cell probed reproduces the " +
-    "exact agreement verbatim") {
-    val corpus = emb.select(col("vec_id"), col("embedding"), col("label"))
-    val cents = knnCentroids(8)
-    val exact = Similarity
-      .knnLabelAgreement(corpus, "vec_id", "embedding", "label")
-    val blocked = Similarity.selfKnnLabelAgreementByCell(
-      corpus, "vec_id", "embedding", "label", cents, nprobe = cents.size)
-    // probing all cells covers every (query, corpus) pair exactly once
-    assert(exact.exceptAll(blocked).count() == 0)
-    assert(blocked.exceptAll(exact).count() == 0)
-  }
-
-  test("cell-blocked self-kNN at nprobe=2 stays close to the exact " +
-    "agreement rate (the recall/cost dial)") {
-    val corpus = emb.select(col("vec_id"), col("embedding"), col("label"))
-    val cents = knnCentroids(8)
-    val n = corpus.count().toDouble
-    def rate(df: org.apache.spark.sql.DataFrame) =
-      df.filter(col("agree")).count() / n
-    val exact = Similarity
-      .knnLabelAgreement(corpus, "vec_id", "embedding", "label")
-    val blocked = Similarity.selfKnnLabelAgreementByCell(
-      corpus, "vec_id", "embedding", "label", cents, nprobe = 2)
-    // on this corpus no probed neighborhood is empty, so every query
-    // emits a verdict; a vector ALONE in all its probed cells would
-    // legitimately emit none (the documented contract difference from
-    // the exact form)
-    assert(blocked.count() == n.toLong)
-    assert(math.abs(rate(blocked) - rate(exact)) <= 0.1,
-      s"agreement drifted: exact ${rate(exact)} vs blocked ${rate(blocked)}")
-  }
-
-  test("the ln-scaled nprobe rule keeps blocked agreement >= 90% of " +
-    "exact (the round-14 fidelity-decay fix, floor-pinned)") {
-    val corpus = emb.select(col("vec_id"), col("embedding"), col("label"))
-    val nlist = math.max(32L, corpus.count() / 512L).toInt
-    // hash-ordered seeds (NOT knnCentroids' stride pool, which holds
-    // only ~6 ids at this SF — the ivfrecall seed-starvation artifact)
-    val cents = emb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(nlist).collect().zipWithIndex.map { case (r, i) =>
-        (i, r.getSeq[Float](r.fieldIndex("embedding"))
-          .map(_.toDouble).toArray)
-      }.toSeq
-    val nprobe = Similarity.nprobeForNlist(cents.size)
-    val exact = Similarity
-      .knnLabelAgreement(corpus, "vec_id", "embedding", "label")
-      .filter(col("agree")).count()
-    val blocked = Similarity.selfKnnLabelAgreementByCell(
-        corpus, "vec_id", "embedding", "label", cents, nprobe)
-      .filter(col("agree")).count()
-    assert(blocked >= math.ceil(exact * 0.9).toLong,
-      s"blocked $blocked < 90% of exact $exact at nprobe=$nprobe, " +
-        s"nlist=${cents.size}")
   }
 
   test("labelCentroidOutliers: a planted far vector ranks 1 in its " +

@@ -146,16 +146,15 @@ class TfIdfSpec extends SparkTestBase {
   }
 
   test("hashedVec output feeds the similarity stack directly: a seeded " +
-    "near-dup text pair crosses the LSH cosine-pair threshold on the " +
-    "real corpus, and scores above every unrelated partner") {
+    "near-dup text pair scores cosine 1 verbatim and above 0.9 diluted " +
+    "on the real corpus") {
     // The contract that makes hashedVec useful: its (id, embedding)
     // output is EXACTLY the shape the ANN/dedup operators consume — no
-    // glue beyond a rename. Seed one guaranteed near-dup (a real doc's
-    // text plus one token) and run the standard LSH cosine-pair
-    // operator over the featurized corpus.
+    // glue beyond a rename. Seed guaranteed near-dups of a real doc and
+    // score them with Similarity.cosine over the featurized corpus.
     // Two seeds, both regen-proof: 900000 is the donor VERBATIM (same
     // buckets, same tf, same idf -> the identical unit vector: cosine
-    // exactly 1 and LSH co-bucketing guaranteed, whatever the planes),
+    // exactly 1),
     // and 900001 is the donor doubled plus one nonsense token (pure tf
     // scaling normalizes away; the lone unseen token dilutes across 2x
     // the mass — a deterministic high-but-not-1 cosine). A single
@@ -173,7 +172,7 @@ class TfIdfSpec extends SparkTestBase {
       (900001L, dText + " " + dText + " zzqxveq")).toDF("doc_id", "text"))
     val vecs = TfIdf.hashedVec(seeded, "doc_id", "text", 64)
       .select(col("doc_id").as("id"), col("embedding").as("vec"))
-    // exact arm: direct cosine over the featurized vectors
+    // direct cosine over the featurized vectors
     val byId = vecs.filter(col("id").isin(donorId, 900000L, 900001L))
     val sims = byId.select(col("id"), col("vec"))
       .crossJoin(byId.select(col("id").as("id2"), col("vec").as("vec2")))
@@ -183,13 +182,6 @@ class TfIdfSpec extends SparkTestBase {
     assert(sims(900000L) >= 0.999999, s"verbatim copy cos ${sims(900000L)}")
     assert(sims(900001L) > 0.9 && sims(900001L) < 1.0,
       s"diluted perturbation cos ${sims(900001L)}")
-    // blocked arm: the standard LSH pair operator over the SAME frame
-    // must surface the identical pair (same vector -> same bucket)
-    val pairs = Similarity.cosineNearDupPairs(vecs, 0.99, 2, 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(pairs.exists { case (a, b, s) =>
-      Set(a, b) == Set(donorId, 900000L) && s >= 0.999999 },
-      s"verbatim pair missing from LSH pairs: ${pairs.take(5).toSeq}")
   }
 
   test("hashedVec: the md5 dial is hash-equal to a by-hand md5 bucket " +

@@ -33,13 +33,16 @@ class IntervalJoinRewriteSpec extends SparkTestBase {
   test("rewritten join returns exactly the un-rewritten rows") {
     val withRule = naturalJoin.select("pid", "cid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.rewrite.intervalJoin", "false")
-    try {
-      val without = naturalJoin.select("pid", "cid").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(withRule == without)
-      assert(withRule.nonEmpty)
-    } finally spark.conf.set("spark.graft.rewrite.intervalJoin", "true")
+    // the same band as two one-sided bounds: three conjuncts and no
+    // abs, so the rule does not match and Spark plans it unchanged
+    val reference = purchases.join(clicks, col("pu") === col("cu") &&
+      col("pus") - col("cus") <= W && col("cus") - col("pus") <= W)
+    val refPlan = reference.queryExecution.executedPlan.toString
+    assert(!refPlan.contains("__ij_cell"), s"reference was rewritten:\n$refPlan")
+    val without = reference.select("pid", "cid").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(withRule == without)
+    assert(withRule.nonEmpty)
   }
 
   test("rule leaves unrelated joins alone") {
