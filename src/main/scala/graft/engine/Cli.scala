@@ -36,8 +36,8 @@ object Cli {
     * code. A user error is one line on `err`: `parse error:` (exit 3) for
     * a query Spark cannot parse, `error:` (exit 2) for an unknown column
     * or table, a missing or malformed catalog file, a CSV that cannot
-    * be read as integers, or an ANSI arithmetic error (division by zero,
-    * long overflow).
+    * be read as integers, an ANSI arithmetic error (division by zero,
+    * long overflow), or a result larger than `spark.driver.maxResultSize`.
     */
   def execute(spark: SparkSession, query: String, dir: String,
       out: PrintStream, err: PrintStream): Int = {
@@ -65,6 +65,10 @@ object Cli {
         fail(2, s"error: ${firstLine(e.getMessage)}" +
           Option(e.getCause).map(c => s": ${firstLine(c.getMessage)}")
             .getOrElse(""))
+      case e: SparkException if Option(e.getMessage).exists(_.contains(
+          "is bigger than spark.driver.maxResultSize")) =>
+        fail(2, s"error: ${firstLine(e.getMessage)
+          .stripPrefix("Job aborted due to stage failure: ")}")
     }
   }
 

@@ -23,16 +23,8 @@ trait SparkTestBase extends AnyFunSuite {
     * them afterwards — the session is shared across suites, so a leaked
     * conf would bleed into unrelated tests.
     */
-  def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
-    val conf = spark.conf
-    val saved = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try f
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
+  def withSQLConf[T](pairs: (String, String)*)(f: => T): T =
+    Confs.withSQLConf(spark, pairs: _*)(f)
 
   /** Run `f` in job group `group`; the Spark jobs it started. The
     * listener bus is asynchronous, so a fence job in a group of its own

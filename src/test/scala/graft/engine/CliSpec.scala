@@ -1,7 +1,11 @@
 package graft.engine
 
-import java.io.{ByteArrayOutputStream, PrintStream}
+import java.io.{ByteArrayOutputStream, File, PrintStream}
+import java.lang.management.ManagementFactory
 import java.nio.file.Files
+import java.util.concurrent.TimeUnit
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 
@@ -94,6 +98,31 @@ class CliSpec extends SparkTestBase {
       val (pcode, _, perr) = cli("selec p from cli_err", dir)
       assert(pcode == 3 && perr.size == 1 &&
         perr.head.startsWith("parse error: "), perr)
+    }
+  }
+
+  test("a result over spark.driver.maxResultSize is one error line, exit 2") {
+    // the limit is fixed when the SparkContext starts: run Cli.main in a
+    // JVM of its own, with this JVM's options and classpath
+    val rows = (0 until 20000).map(i => s"$i,${i * 7919L % 100003}")
+    withCatalog(spark, "cli_big" -> rows.mkString("", "\n", "\n")) { (dir, _) =>
+      val java = s"${System.getProperty("java.home")}/bin/java"
+      val cmd = Seq(java) ++
+        ManagementFactory.getRuntimeMXBean.getInputArguments.asScala ++
+        Seq("-Xmx1g", "-Dspark.driver.maxResultSize=64k",
+          "-cp", System.getProperty("java.class.path"), "graft.engine.Cli",
+          "select p, q from cli_big", dir)
+      val (outFile, errFile) = (new File(dir, "out.txt"), new File(dir, "err.txt"))
+      val proc = new ProcessBuilder(cmd: _*)
+        .redirectOutput(outFile).redirectError(errFile).start()
+      val exited = proc.waitFor(120, TimeUnit.SECONDS)
+      if (!exited) proc.destroyForcibly().waitFor()
+      assert(exited, "the CLI did not exit within 120 s")
+      val out = Files.readString(outFile.toPath)
+      val err = Files.readAllLines(errFile.toPath).asScala
+        .filter(_.startsWith("error:")).toSeq
+      assert(proc.exitValue == 2 && out.isEmpty, out)
+      assert(err.size == 1 && err.head.contains("spark.driver.maxResultSize"), err)
     }
   }
 }
