@@ -4,6 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 import graft.functions.{CosineSimilarity, MinHashSignature, SimHash64}
 
@@ -240,9 +241,35 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 /** Session factory with the engine's standard configuration: the settings
   * every entry point (Verify, Bench, Cli, tests) needs to behave
   * identically — UTC, right-sized shuffle partitions for local mode, AQE,
-  * the events-nanos reader flag, and the graft SQL functions.
+  * the events-nanos reader flag, the generated-class cache size, and the
+  * graft SQL functions.
+  *
+  * The generated-class cache is JVM-wide and static: `CodeGenerator`
+  * reads `spark.sql.codegen.cache.maxEntries` once, when it is first
+  * initialized, and keeps that size for the life of the JVM. A session
+  * not built here, or code that generates a class before a session built
+  * here exists, leaves Spark's 100-entry cap in place for every later
+  * session in the same JVM.
   */
 object GraftSession {
+
+  /** Entries in Spark's generated-class cache: the smallest power of two
+    * above the graded inventory's working set.
+    *
+    * Measured on a 4-core host at local[4], passes over all 150 queries in
+    * name order: with this cap, the first pass at sf0.001 compiles 1,596
+    * classes, the second 22 (classes whose code differs from run to run),
+    * the first pass at sf0.1 after them 39 (those 22 plus 17 for plans
+    * AQE picks only at the larger scale). So one pass needs about 1,640
+    * entries. Under Spark's default cap of 100 every pass compiled about
+    * 2,290 classes, because a loop over more than 100 classes evicts each
+    * class before it recurs; the five `pipeline_sf0.1` queries alone
+    * recompiled 158 per round. With this cap: 0 per round, and the
+    * second sf0.1 pass took 58 s instead of 97 s. Keeping the working set
+    * retains about 52 MB more heap after GC and 14 MB more Metaspace.
+    */
+  val CodegenCacheEntries = 2048
+
   def builder(master: String = "local[4]",
       shufflePartitions: Int = 4): SparkSession.Builder =
     SparkSession.builder()
@@ -251,6 +278,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+        CodegenCacheEntries.toLong)
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
 }
