@@ -201,12 +201,6 @@ object Dedup {
         .as(Seq("band", "bhash")))
   }
 
-  /** Exact Jaccard similarity between the distinct-token sets of two
-    * text columns (rational arithmetic: |∩| / |∪|).
-    */
-  def jaccard(textA: Column, textB: Column): Column =
-    setJaccard(array_distinct(tokens(textA)), array_distinct(tokens(textB)))
-
   /** MinHash-LSH near-dup pipeline: LSH candidates verified with exact
     * Jaccard over the SHINGLE sets — the same similarity the MinHash
     * signature estimates. Verifying in the sketch's own space is what
@@ -807,18 +801,29 @@ object Dedup {
 
   /** Exact pairwise token-set Jaccard within a blocking key — the
     * quadratic verifier, for use inside small blocks only.
+    *
+    * Each document's distinct-token set, `array_distinct(tokens(text))`,
+    * is computed once, below the self-join, and the pair stage runs
+    * `setJaccard` on the two sets: O(docs) splits instead of
+    * O(pairs), the rule minhashNearDups states for its shingle sets. The
+    * result is the same as splitting both texts inside every pair: the
+    * set is a pure function of the text, and `setJaccard` reads only
+    * the sizes of its intersection and union, which the element order
+    * does not change. A null text yields a null set and a null
+    * similarity, so its pairs fail the filter either way; rows with a
+    * null block key join nothing.
     */
   def blockedJaccardPairs(
       docs: DataFrame, idCol: String, textCol: String, blockCol: String,
       threshold: Double): DataFrame = {
-    val n = docs.select(col(idCol).as("id"), col(textCol).as("txt"),
-      col(blockCol).as("blk"))
-    val a = n.toDF("id_a", "text_a", "blk_a")
-    val b = n.toDF("id_b", "text_b", "blk_b")
+    val n = docs.select(col(idCol).as("id"),
+      array_distinct(tokens(col(textCol))).as("set"), col(blockCol).as("blk"))
+    val a = n.toDF("id_a", "set_a", "blk_a")
+    val b = n.toDF("id_b", "set_b", "blk_b")
     a.join(b, col("blk_a") === col("blk_b") && col("id_a") < col("id_b"))
       // unrounded threshold, rounded display — see minhashNearDups
-      .filter(jaccard(col("text_a"), col("text_b")) >= threshold)
+      .filter(setJaccard(col("set_a"), col("set_b")) >= threshold)
       .select(col("id_a"), col("id_b"),
-        round(jaccard(col("text_a"), col("text_b")), 4).as("jaccard"))
+        round(setJaccard(col("set_a"), col("set_b")), 4).as("jaccard"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Semantic (embedding-space) deduplication — the SemDeDup recipe
@@ -91,8 +91,8 @@ object SemanticDedup {
       .select(col("cell"), col("id").as("id_b"), col("vec").as("vb"))
     val pairs = left.join(right, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
-      .filter(round(Similarity.cosine(col("va"), col("vb")), 6)
-        >= simThreshold)
+      .filter(roundedAtLeast(Similarity.cosine(col("va"), col("vb")),
+        simThreshold))
       .select(col("id_a").as("a"), col("id_b").as("b"))
     val labels = Components.minLabel(assigned.select(col("id")), pairs)
     val out = assigned.select(col("id"), col("cell"))
@@ -107,4 +107,25 @@ object SemanticDedup {
     labels.unpersist()
     out
   }
+
+  /** `round(cos, 6) >= t`, with the rounding paid only near `t`.
+    *
+    * Spark rounds a double through `BigDecimal.valueOf` (a
+    * `Double.toString`) and `setScale`; per pair that cost more executor
+    * time than the cosine itself. The cheap test `cos >= t - 1e-6` runs
+    * first, and `And` evaluates the exact test only for the pairs it
+    * lets through. (`cos` is an expression, not a value: a pair past the
+    * guard computes its cosine a second time, and only those few near or
+    * above `t` do.) The rewrite keeps exactly the same pairs:
+    *  - HALF_UP to 6 decimals moves a value by at most 5e-7, and the
+    *    shortest decimal of a double in [-1, 1] is within 1.2e-16 of it,
+    *    so a cosine whose rounding reaches `t` is at least
+    *    `t - 5e-7 - 2.3e-16`, above `t - 1e-6` for every threshold in
+    *    the cosine's range;
+    *  - NaN (a zero vector) passes both tests, since Spark orders NaN
+    *    above every double and `round` returns NaN as it is;
+    *  - a null cosine (null elements, mismatched lengths) nulls both.
+    */
+  private[operators] def roundedAtLeast(cos: Column, t: Double): Column =
+    cos >= t - 1e-6 && round(cos, 6) >= t
 }

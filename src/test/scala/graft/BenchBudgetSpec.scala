@@ -197,14 +197,24 @@ class BenchBudgetSpec extends SparkTestBase {
     assert(tree.get("retries").size == 4)
     val qs = tree.get("queries")
     val emitted = qs.fieldNames.asScala.toSeq
-    // every emitted entry carries the measured value
-    emitted.foreach(n => assert(qs.get(n).asDouble == 1.234, n))
+    // every emitted entry carries the measured value, at 2 decimals
+    emitted.foreach(n => assert(qs.get(n).asDouble == 1.23, n))
     assert(emitted.size + tree.get("queries_omitted").asInt == names.size)
     // the emitted set is exactly the heaviest-nominal prefix — the
     // deterministic subset contract the low-core scaling run relies on
     val expectedOrder = Bench.queryEmitOrder(results, nominals).map(_._1)
     assert(emitted == expectedOrder.take(emitted.size))
-    // substantial coverage: the window fits at least the top 40
-    assert(emitted.size >= 40, s"only ${emitted.size} entries fit")
+    // substantial coverage: the window fits at least the top 50 (47 at
+    // 3 decimals)
+    assert(emitted.size >= 50, s"only ${emitted.size} entries fit")
+    info(s"${emitted.size} of ${names.size} entries fit in ${line.length} chars")
+    // scalars keep 3 decimals; entries drop trailing zeros, and a whole
+    // second prints as an integer
+    assert(line.contains("\"value\":169.000,"), line)
+    val small = Bench.totalLine(Seq("a" -> 2.0, "b" -> 0.5, "c" -> 0.004,
+      "d" -> 12.345, "e" -> -1.0), Map.empty, 14.849, 0.4, 0, 0, 0, "{}", 0,
+      0, suspect = false, 14.849, 14.849, "sf")
+    assert(small.contains(
+      "\"queries\":{\"a\":2,\"b\":0.5,\"c\":0,\"d\":12.35,\"e\":-1}"), small)
   }
 }

@@ -563,17 +563,27 @@ class PlanSpec extends SparkTestBase {
   test("x32, x35, x45, x57: their near-dup graphs close on the driver, so " +
     "building each DataFrame starts a handful of Spark jobs, not ~5 per " +
     "label-propagation round") {
-    // construction-time jobs at sf0.001 on a 4-core host: measured with
-    // the driver closure (and, in brackets, with every graph running the
-    // distributed rounds); each bound is the measured count plus one
+    // construction-time jobs at sf0.001 on a 4-core host, measured after
+    // a warm build of the same query, so every table's schema is already
+    // memoized (Tables.load) whatever ran before in the session; each
+    // bound is the measured count plus one. In brackets: the counts
+    // before the schema memo, and with every graph running the
+    // distributed rounds instead of the driver closure. x86 has no
+    // near-dup graph; its construction jobs are pinned here with the
+    // other eager builders of the pipeline_sf0.1 workload.
     val bounds = Seq(
-      "x32_dedup_clusters" -> 6, // 5 (25-27)
-      "x35_corpus_pipeline" -> 9, // 8 (32)
-      "x45_semantic_dedup" -> 13, // 12 (26-28)
-      "x57_cluster_canonical" -> 6) // 5 (26-27)
+      "x32_dedup_clusters" -> 5, // 4 (5; rounds 25-27)
+      "x35_corpus_pipeline" -> 8, // 7 (8; rounds 32)
+      "x45_semantic_dedup" -> 11, // 10 (12; rounds 26-28)
+      "x57_cluster_canonical" -> 5, // 4 (5; rounds 26-27)
+      "x86_text_retrieval" -> 8) // 7 (8)
+    val counts = bounds.map { case (name, _) =>
+      q(name)
+      name -> jobsStartedBy(s"build-$name") { q(name); () }
+    }
+    info(counts.map { case (n, j) => s"$n=$j" }.mkString(", "))
     val over = for {
-      (name, bound) <- bounds
-      jobs = jobsStartedBy(s"build-$name") { q(name); () }
+      ((name, bound), (_, jobs)) <- bounds.zip(counts)
       if jobs > bound
     } yield s"$name $jobs > $bound"
     assert(over.isEmpty, over.mkString("jobs started while building: ", ", ", ""))

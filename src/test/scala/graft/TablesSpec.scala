@@ -14,6 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * load to identical TIMESTAMP values — so the next driver-side
   * encoding change fails here, loudly, instead of as 35 analysis
   * errors deep inside the events suites.
+  *
+  * And Tables.load's schema memo: a repeated load starts no Spark job,
+  * still returns a fresh relation, and a rewritten table is inferred
+  * again.
   */
 class TablesSpec extends SparkTestBase {
 
@@ -67,5 +71,50 @@ class TablesSpec extends SparkTestBase {
       "yyyy-MM-dd HH:mm:ss"), StringType)
     val e = intercept[IllegalStateException] { loadTs(dir) }
     assert(e.getMessage.contains("StringType"))
+  }
+
+  test("a second load of a table starts no Spark job, reads the inferred " +
+    "schema, and self-joins with distinct sides") {
+    Tables.load(spark, sfDir, "documents")
+    val jobs = jobsStartedBy("tables-second-load") {
+      Tables.load(spark, sfDir, "documents"); ()
+    }
+    assert(jobs == 0, s"a memoized load started $jobs jobs")
+    // events' loader rewrites ts, so its schema is not the file's
+    Tables.all.filterNot(_ == "events").foreach { n =>
+      Tables.load(spark, sfDir, n)
+      assert(Tables.load(spark, sfDir, n).schema ==
+        spark.read.parquet(s"$sfDir/$n.parquet").schema, n)
+    }
+    val a = Tables.load(spark, sfDir, "documents")
+    val b = Tables.load(spark, sfDir, "documents")
+    val n = a.count()
+    // one relation served twice would make the condition a tautology
+    // and the join a cross product of n * n rows
+    assert(a.join(b, a("doc_id") === b("doc_id")).count() == n)
+  }
+
+  test("a table rewritten with another schema in the same session is " +
+    "inferred again; events' ts branch runs on a memo hit") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tab_stale").toString
+    def docs = Tables.load(spark, dir, "documents")
+    Seq((1L, "a b")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(docs.columns.toSeq == Seq("doc_id", "text"))
+    assert(jobsStartedBy("tables-stale-hit") { docs; () } == 0)
+    Seq((1L, "a b", "en")).toDF("doc_id", "text", "lang")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(docs.columns.toSeq == Seq("doc_id", "text", "lang"))
+    assert(docs.select("lang").as[String].collect().toSeq == Seq("en"))
+
+    // NTZ micros, loaded twice (the second a memo hit), then rewritten
+    // as legacy nanos longs: every load lands on the same instants
+    writeEvents(dir, timestamp_micros(col("us")), TimestampNTZType)
+    assert(loadTs(dir) == micros)
+    assert(loadTs(dir) == micros)
+    writeEvents(dir, col("us") * 1000L, LongType)
+    assert(loadTs(dir) == micros)
+    assert(loadTs(dir) == micros)
   }
 }

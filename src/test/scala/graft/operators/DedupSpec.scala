@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkTestBase {
@@ -208,8 +209,8 @@ class DedupSpec extends SparkTestBase {
 
   test("jaccard is 1 for identical, 0 for disjoint token sets") {
     val df = Seq(("a b c", "a b c", "x y z")).toDF("t1", "t2", "t3")
-    val r = df.select(Dedup.jaccard(col("t1"), col("t2")),
-      Dedup.jaccard(col("t1"), col("t3"))).collect()(0)
+    val r = df.select(DedupSpec.jaccard(col("t1"), col("t2")),
+      DedupSpec.jaccard(col("t1"), col("t3"))).collect()(0)
     assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 0.0)
   }
 
@@ -254,5 +255,74 @@ class DedupSpec extends SparkTestBase {
     assert(Dedup.minhashNearDupsAgainst(
       corpus, corpus.filter(col("doc_id") < 0), "doc_id", "text", 0.6)
       .count() == 0)
+  }
+
+  test("blockedJaccardPairs equals the per-pair-text formulation on " +
+    "seeded corpora") {
+    val vocab = Seq("a", "b", "c", "d", "e", "f")
+    // null and empty text, repeated and empty tokens, a one-document
+    // block ("solo"), a null block key, and a pair at exactly 0.5:
+    // {a, b} against {a, b, c, d}
+    val fixed = Seq[(Long, String, String)](
+      (0L, null, "en"), (1L, "", "en"), (2L, "", "en"), (3L, "a  a", "en"),
+      (4L, "a a a b", "en"), (5L, "b a", "en"), (6L, "a b", "xx"),
+      (7L, "a b c d", "xx"), (8L, "a b", "solo"), (9L, "a b", null),
+      (10L, "a b", null))
+    def corpus(seed: Int): Seq[(Long, String, String)] = {
+      val r = new scala.util.Random(seed)
+      fixed ++ (0 until 60).map { i =>
+        val text = Seq.fill(r.nextInt(6))(vocab(r.nextInt(vocab.size)))
+          .mkString(" ")
+        (100L + i, text, Seq("en", "fr", "de")(r.nextInt(3)))
+      }
+    }
+    def rows(df: DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .toSet
+    for (seed <- 1 to 4; t <- Seq(0.0, 0.5, 0.8)) {
+      val docs = corpus(seed).toDF("doc_id", "text", "lang")
+      val got = rows(Dedup.blockedJaccardPairs(docs, "doc_id", "text",
+        "lang", t))
+      val want = rows(DedupSpec.blockedJaccardPairsPerPair(docs, "doc_id",
+        "text", "lang", t))
+      assert(got == want, s"seed $seed, threshold $t")
+      assert(got.nonEmpty, s"seed $seed, threshold $t: no pairs")
+      assert(got.contains((6L, 7L, 0.5)) == (t <= 0.5))
+      // {"a", ""} (a double space splits out an empty token) and {a, b}
+      assert(got.contains((3L, 4L, 0.3333)) == (t <= 1.0 / 3))
+      assert(got.contains((4L, 5L, 1.0)))
+      assert(got.contains((1L, 2L, 1.0)))
+      assert(!got.exists { case (a, b, _) => a == 0L || b == 0L ||
+        a == 8L || b == 8L || a == 9L || b == 9L })
+    }
+  }
+}
+
+object DedupSpec {
+  import graft.operators.TextAnalysis.tokens
+
+  /** Exact Jaccard similarity between the distinct-token sets of two
+    * text columns (rational arithmetic: |∩| / |∪|), splitting both
+    * texts wherever it is evaluated.
+    */
+  def jaccard(textA: Column, textB: Column): Column =
+    Dedup.setJaccard(array_distinct(tokens(textA)),
+      array_distinct(tokens(textB)))
+
+  /** Dedup.blockedJaccardPairs as it was before it split each document
+    * once: both texts travel through the self-join and every pair splits
+    * them again. The reference its law compares against.
+    */
+  def blockedJaccardPairsPerPair(
+      docs: DataFrame, idCol: String, textCol: String, blockCol: String,
+      threshold: Double): DataFrame = {
+    val n = docs.select(col(idCol).as("id"), col(textCol).as("txt"),
+      col(blockCol).as("blk"))
+    val a = n.toDF("id_a", "text_a", "blk_a")
+    val b = n.toDF("id_b", "text_b", "blk_b")
+    a.join(b, col("blk_a") === col("blk_b") && col("id_a") < col("id_b"))
+      .filter(jaccard(col("text_a"), col("text_b")) >= threshold)
+      .select(col("id_a"), col("id_b"),
+        round(jaccard(col("text_a"), col("text_b")), 4).as("jaccard"))
   }
 }

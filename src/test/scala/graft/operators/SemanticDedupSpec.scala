@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkTestBase
@@ -122,5 +122,80 @@ class SemanticDedupSpec extends SparkTestBase {
       // 24 pairs) so at least one non-singleton cluster must exist
       assert(out.filter(!col("keep")).count() > 0)
     } finally out.unpersist()
+  }
+
+  test("the guarded pair filter keeps exactly the pairs of " +
+    "round(cosine, 6) >= t") {
+    def exact(cos: Column, t: Double): Column = round(cos, 6) >= t
+    // (id, predicate) for both forms, nulls kept: the filter drops a
+    // null, but the two forms must agree on it as well
+    def both(df: DataFrame, t: Double): (Seq[(Long, Option[Boolean])],
+        Seq[(Long, Option[Boolean])]) = {
+      val rows = df.select(col("id"),
+        SemanticDedup.roundedAtLeast(col("cos"), t), exact(col("cos"), t))
+        .collect().toSeq.sortBy(_.getLong(0))
+      def at(i: Int) = rows.map(r =>
+        r.getLong(0) -> Option(r.get(i)).map(_.asInstanceOf[Boolean]))
+      (at(1), at(2))
+    }
+
+    // seeded vectors: near-copies of a few bases, so cosines crowd the
+    // thresholds; each threshold set includes rounded cosines of actual
+    // pairs and the next 6-decimal step above them
+    val r = new scala.util.Random(7)
+    val bases = Seq.fill(4)(Array.fill(8)(r.nextGaussian()))
+    val vecs = (0 until 40).map { i =>
+      i.toLong -> bases(i % 4).map(x => (x + 0.05 * r.nextGaussian()).toFloat)
+    } ++ Seq(
+      40L -> Array.fill(8)(0f),                      // zero vector: NaN
+      41L -> Array(1f, 2f, 3f))                      // mismatched length
+    val vs = corpus(vecs: _*)
+    val pairs = vs.select(col("vid").as("ia"), col("emb").as("va"))
+      .crossJoin(vs.select(col("vid").as("ib"), col("emb").as("vb")))
+      .select((col("ia") * 100 + col("ib")).as("id"),
+        Similarity.cosine(col("va"), col("vb")).as("cos"))
+      .localCheckpoint()
+    val cosines = pairs.select("cos").collect().map(_.get(0))
+      .collect { case d: Double if !d.isNaN => d }
+    assert(cosines.size > 1000)
+    val near = cosines.sorted.reverse.take(400).grouped(57).map(_.head)
+      .map(c => BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+        .toDouble).toSeq
+    val ts = Seq(0.5, 0.9, 0.95, 0.99) ++ near ++ near.map(_ + 1e-6)
+    for (t <- ts) {
+      val (guarded, reference) = both(pairs, t)
+      assert(guarded == reference, s"threshold $t")
+    }
+    assert(both(pairs, 0.9)._1.exists(_._2.contains(true)))
+    // a NaN cosine (zero vector) passes both forms; a mismatched length
+    // is a null cosine, null in both
+    assert(both(pairs, 0.9)._1.toMap.apply(4001L).contains(true))
+    assert(both(pairs, 0.9)._1.toMap.apply(4101L).isEmpty)
+
+    // constructed cosines around t = 0.95: 0.9499995 rounds HALF_UP to
+    // 0.95 and is kept, 0.94999949 is not; a null element nulls the
+    // cosine; the guard itself sits at t - 1e-6
+    val t = 0.95
+    val built = spark.createDataFrame(Seq[(Long, Option[Double])](
+      1L -> Some(t - 5e-7), 2L -> Some(t - 4.9e-7), 3L -> Some(t - 5.1e-7),
+      4L -> Some(Math.nextUp(t)), 5L -> Some(t), 6L -> Some(t - 1e-6),
+      7L -> Some(Math.nextDown(t - 1e-6)), 8L -> Some(Double.NaN),
+      9L -> None, 10L -> Some(1.0), 11L -> Some(-1.0), 12L -> Some(t + 5e-7)))
+      .toDF("id", "cos")
+    val (guarded, reference) = both(built, t)
+    assert(guarded == reference)
+    assert(guarded.toMap == Map(1L -> Some(true), 2L -> Some(true),
+      3L -> Some(false), 4L -> Some(true), 5L -> Some(true),
+      6L -> Some(false), 7L -> Some(false), 8L -> Some(true), 9L -> None,
+      10L -> Some(true), 11L -> Some(false), 12L -> Some(true)))
+    // a null element in a vector gives a null cosine as well
+    val withNull = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L, Seq[Any](1.0, null)))),
+      StructType(Seq(StructField("id", LongType),
+        StructField("v", ArrayType(DoubleType)))))
+      .select(col("id"), Similarity.cosine(col("v"), array(lit(1.0), lit(1.0)))
+        .as("cos"))
+    val (g, e) = both(withNull, t)
+    assert(g == e && g == Seq(1L -> None))
   }
 }
